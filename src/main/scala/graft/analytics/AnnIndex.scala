@@ -65,12 +65,17 @@ object AnnIndex {
     graft.sink.CrashPoints.reached("annbuild.cleared")
     // The three tables are DISJOINT and each write is recoverable from
     // source (a build on a live name re-runs; the refresh path builds into
-    // staging, where any torn subset is dropped and rebuilt by the re-run
-    // — the subset no longer being a strict prefix changes nothing: every
-    // mixed durable state was already reachable from the old write order,
-    // and recovery never reads a staging table it didn't just write). Fan
-    // them on driver threads — the round-14 Par discipline (guide §2.6):
-    // the gate families pay max(write) instead of Σ(write).
+    // staging, where any torn subset is dropped and rebuilt by the re-run).
+    // Running them concurrently makes torn states reachable that the old
+    // serial order (centroids, cells, label stats) never produced —
+    // `_cells` durable without `_centroids` among them. Recovery is still
+    // safe, for a different reason: the re-run rewrites all three tables,
+    // and the only table recovery READS is `_cells` (refreshQuantizer's
+    // resume-before-read retrains from the vectors there), which each
+    // write commits as one complete snapshot — a missing or stale
+    // `_centroids` never feeds the rebuilt generation. Fan them on driver
+    // threads — the round-14 Par discipline (guide §2.6): the gate
+    // families pay max(write) instead of Σ(write).
     import graft.functions.PhaseTimer.timed
     graft.functions.Par.inParallel(Seq[Option[() => Unit]](
       Some(() => timed("annidx.centroids") {

@@ -69,15 +69,24 @@ object BpeInduction {
     * (round, pa, pb, merged, cnt) — one row per round, hash-exact vs the
     * oracle's unrolled twin. */
   def merges(spark: SparkSession, dir: String, rounds: Int = 8,
-      topWords: Int = 100): DataFrame =
+      topWords: Int = 100): DataFrame = {
+    require(topWords > 0 && topWords <= MaxTopWords,
+      s"topWords must be in [1, $MaxTopWords] (the vocabulary is collected to the driver), got $topWords")
     graft.functions.SessionMemo(spark, s"bpe_merges:$dir:$rounds:$topWords") {
       mergesUncached(spark, dir, rounds, topWords)
     }
+  }
+
+  /** Upper bound on the training vocabulary [[merges]] collects to the
+    * driver: 64k (word, freq) rows — a few MB, far above the vocabularies
+    * the gates train on, far below a corpus-sized word table. */
+  val MaxTopWords: Int = 1 << 16
 
   private def mergesUncached(spark: SparkSession, dir: String, rounds: Int,
       topWords: Int): DataFrame = {
-    // The capped word table is a MODEL ARTIFACT, not data: ≤ topWords rows
-    // by construction (the limit above), the same bounded cardinality a
+    // The capped word table is a MODEL ARTIFACT, not data: ≤ topWords ≤
+    // MaxTopWords rows by construction (the limit above, the cap
+    // [[merges]] enforces), the same bounded cardinality a
     // broadcast join ships to every executor. ONE job collects it; the
     // rounds' argmax+merge loop over those symbol lists runs on the driver.
     // The former shape ran TWO eager Spark jobs per round over the same

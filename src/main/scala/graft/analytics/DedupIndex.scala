@@ -23,6 +23,11 @@ import graft.sink.{Bucketed, TableProps, Tombstones}
   *    reads only the slices its keys hash into, O(batch keys) partitions
   *    out of `parts`, instead of the whole corpus-sized table per batch
   *    (round-11 VERDICT item 2 — the last linear-I/O cost on this path).
+  *    `parts` is sized from the band rows ([[derivedParts]]): a slice is
+  *    one task's comfortable read, so an index that fits one slice has
+  *    ONE — every append and compaction then writes one file, not one per
+  *    slice of a grid sized for a corpus it does not have — and [[compact]]
+  *    widens the grid as the index grows.
   *
   * Query plan: every join in [[nearDupsAgainst]] broadcasts the BATCH side
   * (a daily batch is MBs against a corpus of TBs), so both index tables are
@@ -63,9 +68,8 @@ object DedupIndex {
     * granularity (a probe reads ≤ its distinct key-hash slices). ≤ 0
     * (the default) DERIVES it from the corpus at build time via
     * [[derivedParts]] — nothing should hand-size a knob the build can
-    * measure (round-12 VERDICT: a 100 TB build at a fixed 64 puts ~1.5 TB
-    * in every probe slice); `buckets` ≤ 0 derives the bucketed tables'
-    * width the same way ([[Bucketed.derivedBuckets]], round 14).
+    * measure, at either end of the scale; `buckets` ≤ 0 derives the
+    * bucketed tables' width the same way ([[Bucketed.derivedBuckets]]).
     * `estThreshold` is the MinHash verify gate
     * [[nearDupsAgainst]] applies by default — persisted with the index so
     * two callers probing the same corpus get the same dedup semantics. */
@@ -98,18 +102,22 @@ object DedupIndex {
     Tombstones.clear(spark, name) // a rebuild has nothing to forget
   }
 
-  /** Partition-grid auto-sizing: target ≤ `spark.graft.dedup.rows.per.slice`
-    * band rows per probe slice (default 4M ≈ a few hundred MB of band
-    * rows — one task's comfortable read), clamped to [64, 32768]. The
-    * floor keeps local/test layouts at the historical grid (file counts
-    * sane at sf≤0.1); the ceiling bounds catalog metadata. The input is a
-    * COUNT of the materialized signature frame × the band constant — no
-    * extra scan of anything un-checkpointed. */
-  private[graft] def derivedParts(spark: SparkSession, bandRows: Long): Int = {
+  /** Partition-grid auto-sizing: ⌈rows / target⌉ slices for a target of
+    * `spark.graft.dedup.rows.per.slice` rows per probe slice (default 4M ≈
+    * a few hundred MB of band rows — one task's comfortable read),
+    * clamped to [1, 32768]. There is no floor beyond one slice: every
+    * slice costs each append and compaction a file, a task and a
+    * partition directory, so a grid wider than the rows call for makes the
+    * standing loop pay per-slice overhead for pruning a single task's read
+    * does not need. The ceiling bounds catalog metadata. Build inputs are a
+    * COUNT of the materialized signature frame × the band constant (the
+    * `_pfx` table of a clustered build shares that modulus); [[compact]]
+    * re-applies the rule to each partitioned table's live row count and
+    * only ever widens. */
+  private[graft] def derivedParts(spark: SparkSession, rows: Long): Int = {
     val target = spark.conf.getOption("spark.graft.dedup.rows.per.slice")
       .map(_.toLong).getOrElse(4L << 20)
-    math.max(64L, math.min(32768L,
-      (bandRows + target - 1) / target)).toInt
+    math.max(1L, math.min(32768L, (rows + target - 1) / target)).toInt
   }
 
   /** DELETE docs from the index — merge-on-read ([[graft.sink.Tombstones]]):
@@ -235,14 +243,23 @@ object DedupIndex {
     Seq("_sigs", "_bands").foreach(s =>
       Bucketed.healInterruptedReplace(spark, name + s))
 
-  /** Compaction for the bucketed index tables — the dedup twin of
+  /** Compaction for the index tables — the dedup twin of
     * [[AnnIndex.compact]]: every [[extend]] (and every DedupIndexStream
-    * micro-batch) appends one file per touched bucket, so after N extends
-    * each index scan opens N files per bucket. Rewrites each table to ONE
-    * file per bucket under the same spec via
+    * micro-batch) appends one file per touched bucket or slice, so after
+    * N extends each index scan opens N files per bucket. Rewrites each
+    * bucketed table to ONE file per bucket under the same spec via
     * [[Bucketed.compactBucketed]] (the snapshot-before-repartition trap
-    * and the warehouse-scale swap story live there); DedupIndexSpec pins
-    * answers-unchanged + file-count collapse + preserved bucket spec. */
+    * and the warehouse-scale swap story live there), and each partitioned
+    * table (`_bands`, `_pfx`) to one file per slice via
+    * [[Bucketed.compactPartitioned]]. Because this pass reads every row
+    * anyway, it is also where the slice grid GROWS: each partitioned
+    * table's live row count re-derives its width ([[derivedParts]]), and
+    * a width above the stored `graft.parts` re-grids the table through
+    * the crash-safe [[Bucketed.replaceTable]] with `graft.parts` (and, on
+    * `_bands`, `graft.est.threshold`) re-stamped before the rename — so an
+    * index built small does not stay under-sliced as the stream grows it.
+    * The grid never shrinks. DedupIndexSpec pins answers-unchanged,
+    * file-count collapse, preserved bucket spec and the growth path. */
   def compact(spark: SparkSession, name: String): Unit = {
     healedTables(spark, name)
     // the physical purge point: the rewrite drops tombstoned rows from
@@ -258,7 +275,8 @@ object DedupIndex {
       () => Bucketed.compactBucketed(spark, s"${name}_sigs", "doc_id",
         Tombstones.filter(_, name, "doc_id")),
       () => Bucketed.compactPartitioned(spark, s"${name}_bands", "pb",
-        Tombstones.filter(_, name, "doc_id"))) ++
+        Tombstones.filter(_, name, "doc_id"),
+        regrid = Some(Bucketed.Regrid(derivedParts(spark, _), withPb)))) ++
       (if (isClustered(spark, name)) clusterCompactLegs(spark, name) else Nil)
     graft.functions.Par.inParallel(legs)
     Tombstones.clear(spark, name)
@@ -422,8 +440,8 @@ object DedupIndex {
     * round-11 ADVICE bug (silent maintenance at the wrong setting). */
   private val ThresholdProp = "graft.cluster.threshold"
   // the MinHash verify gate's default — on `_bands` (the LSH surface it
-  // gates; compaction there is in-place, so the property needs no
-  // re-stamp seam, and it rides generation renames like graft.parts)
+  // gates; it rides generation renames like graft.parts, and a growth
+  // re-grid in [[compact]] carries it onto the staging table)
   private val EstProp = "graft.est.threshold"
 
   /** The persisted default verify threshold; 0.5 for indexes predating
@@ -812,7 +830,8 @@ object DedupIndex {
       () => Bucketed.compactBucketed(spark, s"${name}_shg", "doc_id",
         df => Tombstones.filter(df, name, "doc_id").dropDuplicates("doc_id")),
       () => Bucketed.compactPartitioned(spark, s"${name}_pfx", "ps",
-        df => Tombstones.filter(df, name, "doc_id").distinct()),
+        df => Tombstones.filter(df, name, "doc_id").distinct(),
+        regrid = Some(Bucketed.Regrid(derivedParts(spark, _), withPs))),
       () => {
         // the fold reads only _clusters ⊕ _labelmap ⊕ the log — disjoint
         // from the shingle/prefix rewrites, so it rides its own leg

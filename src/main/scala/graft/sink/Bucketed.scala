@@ -78,7 +78,7 @@ object Bucketed {
       // here (round-9 ADVICE).
       ManagedPaths.clearStale(spark, table)
       CrashPoints.reached("heal.cleared-live")
-      spark.sql(s"ALTER TABLE $staging RENAME TO $table")
+      renameInto(spark, staging, table)
       CrashPoints.reached("heal.renamed")
       true
     } else false
@@ -132,8 +132,37 @@ object Bucketed {
       val fs = liveLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(liveLoc)) fs.delete(liveLoc, true)
       CrashPoints.reached("complete.cleared-live")
-      spark.sql(s"ALTER TABLE $staging RENAME TO $table")
+      renameInto(spark, staging, table)
       CrashPoints.reached("complete.renamed")
+    }
+  }
+
+  /** RENAME `staging` onto the absent live name. A managed-table rename
+    * moves the directory, but the catalog keeps every partition's old
+    * location (a partitioned table would then quietly scan zero rows), so
+    * the staging partitions are first pointed at the paths the rename is
+    * about to produce: a crash before the rename leaves them on a table
+    * nothing reads until the heal repeats both steps, and after it the
+    * live table is whole. */
+  private def renameInto(spark: SparkSession, staging: String,
+      table: String): Unit = {
+    anchorPartitions(spark, staging, ManagedPaths.pathOf(spark, table))
+    spark.sql(s"ALTER TABLE $staging RENAME TO $table")
+  }
+
+  /** Point every catalog partition of `table` at `<root>/<col=value>`;
+    * a no-op for unpartitioned tables. O(#partitions) catalog metadata. */
+  private[sink] def anchorPartitions(spark: SparkSession, table: String,
+      root: org.apache.hadoop.fs.Path): Unit = {
+    val cat = spark.sessionState.catalog
+    val ti = org.apache.spark.sql.catalyst.TableIdentifier(table)
+    if (cat.getTableMetadata(ti).partitionColumnNames.nonEmpty) {
+      val anchored = cat.listPartitions(ti).map { p =>
+        val dir = p.spec.map { case (k, v) => s"$k=$v" }.mkString("/")
+        p.copy(storage = p.storage.copy(
+          locationUri = Some(new org.apache.hadoop.fs.Path(root, dir).toUri)))
+      }
+      if (anchored.nonEmpty) cat.alterPartitions(ti, anchored)
     }
   }
 
@@ -251,6 +280,13 @@ object Bucketed {
       .format("parquet").partitionBy(partCol).saveAsTable(table)
   }
 
+  /** Partition-grid growth rule for a full [[compactPartitioned]] pass:
+    * `width(liveRows)` derives the modulus the table's live row count
+    * calls for, `derive(rows, parts)` re-derives the partition column at a
+    * new modulus (the same derivation the table's probes apply). */
+  final case class Regrid(width: Long => Int,
+      derive: (DataFrame, Int) => DataFrame)
+
   /** In-layout compaction of a partitioned index table — the
     * [[graft.analytics.AnnIndex.compact]] discipline shared: snapshot
     * through Materialize (the read must not race its own overwrite),
@@ -261,11 +297,24 @@ object Bucketed {
     * produces no snapshot rows, so the dynamic overwrite never touches it
     * and its at-rest bytes would survive the purge). Each step is
     * idempotent, so a crash anywhere replays into the same end state; no
-    * rename is involved, so partition locations never strand. */
+    * rename is involved, so partition locations never strand.
+    *
+    * `regrid` (full passes only) GROWS the grid: when `width` of the
+    * snapshot's row total exceeds the stored [[partsOf]], the table is
+    * rewritten at the wider modulus through [[replaceTable]] instead —
+    * every `graft.*` property rides the staging table with `graft.parts`
+    * re-stamped, so the rename publishes layout and modulus together, and
+    * a crash leaves either the old grid serving or the new one healable
+    * (the rename anchors the partitions first — see [[renameInto]]).
+    * The grid never shrinks (a narrower modulus saves nothing a one-file-
+    * per-slice rewrite has not already saved). */
   def compactPartitioned(spark: SparkSession, table: String, partCol: String,
       transform: DataFrame => DataFrame = identity,
-      only: Option[Seq[Long]] = None): Unit = {
+      only: Option[Seq[Long]] = None,
+      regrid: Option[Regrid] = None): Unit = {
     import org.apache.spark.sql.functions.col
+    require(only.isEmpty || regrid.isEmpty,
+      "a slice-scoped compaction cannot re-grid the table")
     val t0 = spark.table(table)
     // `only` scopes the pass to chosen partition values (the AnnIndex
     // cid-scoping production shape: compact the slices today's ingest
@@ -277,20 +326,41 @@ object Bucketed {
     val t = only.map(vs => t0.filter(col(partCol).isin(vs: _*))).getOrElse(t0)
     val snap0 = graft.functions.Materialize(
       transform(t).select(t0.columns.toIndexedSeq.map(col): _*))
-    // one task per rewritten slice (the round-14 write-width fix — see
-    // [[writePartitioned]]); the width comes from the snapshot itself, so
-    // a threshold-scoped pass stays exactly as wide as its selection
-    val width = snap0.select(col(partCol)).distinct().count().toInt.max(1)
-    val snap = snap0.repartition(width, col(partCol))
+    // ONE job over the checkpointed snapshot: its per-slice counts give
+    // the write width (one task per rewritten slice — the round-14 fix,
+    // see [[writePartitioned]]; a threshold-scoped pass stays exactly as
+    // wide as its selection), the kept set for the emptied-partition drop
+    // and the row total the re-grid decision reads
+    val counts = snap0.groupBy(col(partCol)).count().collect()
+    val grown = regrid.map(r => r -> r.width(counts.map(_.getLong(1)).sum))
+      .filter { case (_, parts) => parts > partsOf(spark, table) }
     CrashPoints.reached("pcompact.snapshotted")
+    grown match {
+      case Some((r, parts)) =>
+        val carried = spark.sessionState.catalog
+          .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
+          .properties.filter { case (k, _) => k.startsWith("graft.") && k != PartsProp }
+        replaceTable(spark, table, { staging =>
+          writePartitioned(r.derive(snap0.drop(partCol), parts),
+            staging, partCol, parts)
+          if (carried.nonEmpty) TableProps.set(spark, staging, carried.toSeq: _*)
+        })
+      case None =>
+        rewriteInPlace(spark, table, partCol,
+          snap0.repartition(counts.length.max(1), col(partCol)),
+          counts.map(_.get(0).toString).toSet, only)
+    }
+  }
+
+  private def rewriteInPlace(spark: SparkSession, table: String,
+      partCol: String, snap: DataFrame, kept: Set[String],
+      only: Option[Seq[Long]]): Unit = {
     // conf-isolated dynamic overwrite: concurrent Par legs (DedupIndex
     // .compact fans _bands/_pfx through here while the forget gate fans
     // AnnIndex.compact) would race a session-level set/restore dance —
     // see DynamicOverwrite's scaladoc for the truncation window.
     DynamicOverwrite.insertInto(snap, table)
     CrashPoints.reached("pcompact.rewritten")
-    val kept = snap.select(col(partCol)).distinct().collect()
-      .map(_.get(0).toString).toSet
     val selected = only.map(_.map(_.toString).toSet)
     val cat = spark.sessionState.catalog
     val ti = org.apache.spark.sql.catalyst.TableIdentifier(table)

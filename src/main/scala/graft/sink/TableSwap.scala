@@ -69,17 +69,6 @@ object TableSwap {
 
   /** See scaladoc: partition locations stranded by a managed-table rename
     * are re-anchored under the table's new root. */
-  private def reanchorPartitions(spark: SparkSession, table: String): Unit = {
-    val cat = spark.sessionState.catalog
-    val ti = org.apache.spark.sql.catalyst.TableIdentifier(table)
-    if (cat.getTableMetadata(ti).partitionColumnNames.nonEmpty) {
-      val root = new org.apache.hadoop.fs.Path(cat.getTableMetadata(ti).location)
-      val fixed = cat.listPartitions(ti).map { p =>
-        val dir = p.spec.map { case (k, v) => s"$k=$v" }.mkString("/")
-        p.copy(storage = p.storage.copy(
-          locationUri = Some(new org.apache.hadoop.fs.Path(root, dir).toUri)))
-      }
-      if (fixed.nonEmpty) cat.alterPartitions(ti, fixed)
-    }
-  }
+  private def reanchorPartitions(spark: SparkSession, table: String): Unit =
+    Bucketed.anchorPartitions(spark, table, ManagedPaths.pathOf(spark, table))
 }

@@ -55,7 +55,8 @@ object DedupIndexStream {
     * `compactEvery` > 0 runs the FULL [[DedupIndex.compact]] after every
     * Nth batch's commit — the log-retiring purge point: every table
     * rewritten (bucketed `_sigs` included), tombstoned rows physically
-    * gone, log cleared. Answer-preserving and idempotent, so it carries
+    * gone, log cleared, and the slice grid widened once the stream has
+    * grown the index past it. Answer-preserving and idempotent, so it carries
     * no marker and a crash-replay that re-compacts is harmless.
     *
     * `targetedEvery` > 0 runs [[DedupIndex.compactOverThreshold]] (at

@@ -54,6 +54,10 @@ class BpeInductionSpec extends SparkSpec {
         .sortBy(_.getAs[Int]("round"))
       finally spark.conf.unset("spark.graft.pairgraph.cache")
     assert(out.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq)
+    // the driver-side vocabulary collect is bounded: an over-cap request
+    // fails before any job runs
+    intercept[IllegalArgumentException](BpeInduction.merges(spark, sf("sf0.01"),
+      rounds = 8, topWords = BpeInduction.MaxTopWords + 1))
   }
 
   test("greedy left-to-right merge application (overlap semantics)") {

@@ -142,6 +142,39 @@ class CrashSweepSpec extends SparkSpec {
     }
   }
 
+  test("dedup compact re-grid (grid grown from the live rows) converges from EVERY crash prefix") {
+    val name = "swdg_idx"; val fresh = "swdgref"
+    val probe = corpus.filter(col("cb") < 40).select("doc_id", "text")
+      .withColumn("doc_id", col("doc_id") + lit(900000L))
+    val live = corpus.filter(col("cb") >= 15).select("doc_id", "text")
+    DedupIndex.build(live, fresh, buckets = 2, estThreshold = 0.6)
+    val ref = DedupIndex.nearDupsAgainst(spark, fresh, probe)
+      .collect().map(_.toSeq).toSet
+    // a target four live-row slices wide: the compact re-grids the
+    // one-slice build through the staging replace
+    val target = (live.count() * 16 + 3) / 4
+    def setup(): Unit = {
+      dropAll(name)
+      DedupIndex.build(corpus.select("doc_id", "text"), name, buckets = 2,
+        parts = 1, estThreshold = 0.6)
+      DedupIndex.delete(corpus.filter(col("cb") < 15).select("doc_id"), name)
+    }
+    spark.conf.set("spark.graft.dedup.rows.per.slice", target.toString)
+    try sweep("dedup re-grid")(setup _)(() => DedupIndex.compact(spark, name))(
+      () => DedupIndex.compact(spark, name)) { k =>
+      val got = DedupIndex.nearDupsAgainst(spark, name, probe)
+        .collect().map(_.toSeq).toSet
+      assert(got == ref, s"probe answers drifted after recovery")
+      assert(graft.sink.Bucketed.partsOf(spark, s"${name}_bands") == 4,
+        "recovered compact did not land the grown grid")
+      assert(DedupIndex.storedEst(spark, name) == 0.6,
+        "recovered re-grid lost the verify threshold")
+      assert(!spark.catalog.tableExists(Tombstones.tableOf(name)),
+        "tombstone log not reset after recovered compact")
+    }
+    finally spark.conf.unset("spark.graft.dedup.rows.per.slice")
+  }
+
   test("lex delete (append + heal) converges from EVERY crash prefix") {
     val name = "swld_idx"; val fresh = "swldref"
     LexIndex.build(corpus.filter(col("cb") >= 25).select("doc_id", "text"),

@@ -8,6 +8,10 @@ import graft.analytics.{Dedup, DedupIndex, Sampling}
 /** Persisted MinHash index + incremental batch dedup (q160). */
 class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
+  /** Spark jobs of one DedupIndexStream batch (probe, survivor write,
+    * extend, full compaction) on a one-slice index. */
+  private val DedupBatchJobs = 29
+
   private def docs = Tables.documents(spark, sf("sf0.01"))
     .select(col("doc_id"), col("text"),
       Sampling.contentBucket(col("text")).as("cb"))
@@ -36,19 +40,22 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     import spark.implicits._
     val corpus = docs.filter(col("cb") >= 10).select("doc_id", "text")
     val batch  = docs.filter(col("cb") < 10).select("doc_id", "text")
-    // clamp boundaries of the pure derivation first
-    assert(DedupIndex.derivedParts(spark, 0L) == 64, "floor")
+    // clamp boundaries of the pure derivation first: an index that fits
+    // one slice gets ONE, the next row opens a second
+    assert(DedupIndex.derivedParts(spark, 0L) == 1, "floor")
+    assert(DedupIndex.derivedParts(spark, 4L << 20) == 1, "one full slice")
+    assert(DedupIndex.derivedParts(spark, (4L << 20) + 1) == 2, "first split")
     assert(DedupIndex.derivedParts(spark, Long.MaxValue / 2) == 32768, "ceiling")
-    // a tiny rows-per-slice target forces the derivation OFF the 64-floor
-    // at spec scale — the layout the 100 TB scaladoc promises, exercised
+    // a tiny rows-per-slice target forces the derivation OFF the one-slice
+    // floor at spec scale — the layout the 100 TB scaladoc promises, exercised
     spark.conf.set("spark.graft.dedup.rows.per.slice", "100")
     try DedupIndex.build(corpus, "spec_idx_grid", buckets = 4)
     finally spark.conf.unset("spark.graft.dedup.rows.per.slice")
     val derived = graft.sink.Bucketed.partsOf(spark, "spec_idx_grid_bands")
-    val expected = math.max(64L, math.min(32768L,
+    val expected = math.max(1L, math.min(32768L,
       (corpus.count() * 16 + 99) / 100)).toInt
-    assert(derived == expected && derived != 64,
-      s"derived grid $derived (expected $expected, non-default)")
+    assert(derived == expected && derived > 1,
+      s"derived grid $derived (expected $expected, above the floor)")
     // the non-default grid changes LAYOUT only: probe answers must match a
     // fixed-64 build of the same corpus exactly
     DedupIndex.build(corpus, "spec_idx_grid64", buckets = 4, parts = 64)
@@ -262,8 +269,10 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     import spark.implicits._
     import graft.streaming.DedupIndexStream
     val tmp = java.nio.file.Files.createTempDirectory("didx_auto").toString
+    // an explicit multi-slice grid: the default one derives a single slice
+    // at spec scale, which would not exercise per-slice file collapse
     DedupIndex.build(docs.filter(col("cb") >= 50).select("doc_id", "text"),
-      "spec_idx_auto", buckets = 4)
+      "spec_idx_auto", buckets = 4, parts = 16)
     val fresh = docs.filter(col("cb") >= 20 && col("cb") < 50)
       .select("doc_id", "text").limit(20).collect()
       .map(r => (r.getLong(0), r.getString(1)))
@@ -302,7 +311,9 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val name = "spec_idx_tgt_loop"
     val tmp = java.nio.file.Files.createTempDirectory("didx_tgt").toString
     val base = docs.filter(col("cb") >= 50).select("doc_id", "text")
-    DedupIndex.build(base, name, buckets = 4)
+    // an explicit multi-slice grid, so the targeted pass has slices to
+    // choose between (the derived default is one slice at spec scale)
+    DedupIndex.build(base, name, buckets = 4, parts = 16)
     val fresh = docs.filter(col("cb") >= 20 && col("cb") < 50)
       .select("doc_id", "text").limit(26).collect()
       .map(r => (r.getLong(0), r.getString(1)))
@@ -357,6 +368,127 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(spark.read.parquet(loc.toString)
       .filter(col("doc_id").isin(gone: _*)).count() == 0,
       "full compact left tombstoned rows at rest")
+  }
+
+  test("growth re-grid: compact widens a small-built grid; answers ≡ from-scratch; probe still DPP-pruned") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import graft.sink.{Bucketed, Tombstones}
+    val name = "spec_idx_grow"
+    val small = docs.filter(col("cb") >= 80).select("doc_id", "text")
+    val more = docs.filter(col("cb") >= 10 && col("cb") < 80).select("doc_id", "text")
+    val gone = small.orderBy(col("doc_id")).limit(2)
+      .collect().map(_.getLong(0)).toSeq
+    // organic probe plus planted copies: of two extended docs (must be
+    // found) and of the two deleted ones (purged through the re-grid)
+    val kept = more.orderBy(col("doc_id")).limit(2).collect().map(_.getLong(0)).toSeq
+    val batch = docs.filter(col("cb") < 3).select("doc_id", "text")
+      .unionByName(docs.filter(col("doc_id").isin(gone ++ kept: _*))
+        .select((col("doc_id") + 9800000L).as("doc_id"), col("text")))
+    // a target the small build exactly fills: it derives ONE slice
+    val target = small.count() * 16
+    spark.conf.set("spark.graft.dedup.rows.per.slice", target.toString)
+    try {
+      DedupIndex.build(small, name, buckets = 4, estThreshold = 0.7)
+      assert(Bucketed.partsOf(spark, s"${name}_bands") == 1,
+        "small build did not derive a single slice")
+      DedupIndex.extend(more, name)
+      assert(Bucketed.partsOf(spark, s"${name}_bands") == 1,
+        "extend changed the grid")
+      DedupIndex.delete(gone.toDF("doc_id"), name)
+      DedupIndex.compact(spark, name)
+    } finally spark.conf.unset("spark.graft.dedup.rows.per.slice")
+    val live = small.unionByName(more).filter(!col("doc_id").isin(gone: _*))
+    val grown = Bucketed.partsOf(spark, s"${name}_bands")
+    val expected = ((live.count() * 16 + target - 1) / target).toInt
+    assert(grown == expected && grown > 1,
+      s"compact re-derived $grown slices from the live rows (expected $expected)")
+    assert(DedupIndex.storedEst(spark, name) == 0.7,
+      "re-grid lost the persisted verify threshold")
+    assert(Tombstones.of(spark, name).isEmpty, "re-grid did not retire the log")
+    // one file per populated slice, every row in the slice its key hashes to
+    val loc = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_bands")).location
+    val dirs = new java.io.File(loc).listFiles().filter(_.getName.startsWith("pb="))
+    assert(dirs.nonEmpty && dirs.forall(_.listFiles().count(_.getName.endsWith(".parquet")) == 1),
+      s"re-grid left ${dirs.map(_.listFiles().length).mkString(",")} files per slice")
+    assert(spark.table(s"${name}_bands").filter(col("pb") =!=
+        pmod(xxhash64(col("band"), col("band_key")), lit(grown.toLong))).isEmpty,
+      "band rows sit in slices of the old modulus")
+    // answers ≡ a from-scratch build over the live corpus
+    DedupIndex.build(live, s"${name}_ref", buckets = 4, estThreshold = 0.7)
+    val q = DedupIndex.nearDupsAgainst(spark, name, batch)
+    val got = q.collect().map(_.toSeq).toSet
+    val ref = DedupIndex.nearDupsAgainst(spark, s"${name}_ref", batch)
+      .collect().map(_.toSeq).toSet
+    assert(got == ref, s"grown index answers diverge from a rebuild")
+    val found = got.map(r => r(0).asInstanceOf[Long] -> r(1).asInstanceOf[Long])
+    assert(kept.forall(id => found((id, id + 9800000L))), "planted copy of an extended doc not found")
+    assert(!gone.exists(id => found((id, id + 9800000L))), "deleted doc found after the re-grid")
+    val scans = collectWithSubqueries(q.queryExecution.executedPlan) {
+      case s: FileSourceScanExec if s.toString.contains(s"${name}_bands") => s
+    }
+    assert(scans.exists(_.toString.contains("dynamicpruning")),
+      s"grown bands scan lacks a dynamic pruning filter:\n${scans.mkString}")
+    // the grid never shrinks: a compact at the default target (one slice)
+    // keeps the grown width
+    DedupIndex.compact(spark, name)
+    assert(Bucketed.partsOf(spark, s"${name}_bands") == grown, "compact shrank the grid")
+  }
+
+  test("job-count pin: one standing batch with a full compaction on a default-built index") {
+    import spark.implicits._
+    import graft.streaming.DedupIndexStream
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val name = "spec_idx_jobs"
+    DedupIndex.build(docs.filter(col("cb") >= 50).select("doc_id", "text"),
+      name, buckets = 4)
+    val parts = graft.sink.Bucketed.partsOf(spark, s"${name}_bands")
+    val fresh = docs.filter(col("cb") >= 20 && col("cb") < 50)
+      .select("doc_id", "text").limit(10).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.toDF("doc_id", "text")
+      .localCheckpoint()
+    // jobs the batch submits — tagged by a local property its Par threads
+    // and Spark's broadcast/stage threads inherit — counted by a listener;
+    // a sentinel job flushes the asynchronous listener bus (a listener
+    // receives events in order)
+    val Tag = "graft.spec.jobpin"
+    val Sentinel = "graft.spec.sentinel"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    def tagged(e: SparkListenerJobStart, key: String): Boolean =
+      Option(e.properties).exists(_.getProperty(key) != null)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (tagged(e, Sentinel)) flushed.countDown()
+        else if (tagged(e, Tag)) started.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(Tag, "1")
+      try DedupIndexStream.processBatch(spark, name, fresh, 0L,
+        java.nio.file.Files.createTempDirectory("didx_jobs").toString,
+        compactEvery = 1)
+      finally sc.setLocalProperty(Tag, null)
+      sc.setLocalProperty(Sentinel, "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(Sentinel, null)
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus not flushed")
+    } finally sc.removeSparkListener(listener)
+    info(s"jobs per standing batch: ${started.get} at $parts slice(s)")
+    assert(parts == 1, s"a small default build derived $parts slices")
+    assert(started.get == DedupBatchJobs,
+      s"one standing batch ran ${started.get} jobs (pinned $DedupBatchJobs)")
+    // the full compaction left one file per slice of the stored grid
+    val loc = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_bands")).location
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(loc))
+    val files = try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.count(_.toString.endsWith(".parquet"))
+    } finally s.close()
+    assert(files == parts, s"_bands holds $files files for $parts stored slices")
   }
 
   test("crash window: replay after extend-but-no-marker keeps the survivors") {
