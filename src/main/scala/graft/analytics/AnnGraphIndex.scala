@@ -116,12 +116,15 @@ object AnnGraphIndex {
     storedInt(spark, name, CapProp, Int.MaxValue)
 
   /** Build (or rebuild) the index over a corpus of (vec_id, v).
-    * `buckets` ≤ 0 (the default) DERIVES the table width from the corpus
-    * ([[Bucketed.derivedBuckets]] — the dedup grid's auto-sizing applied
-    * to the bucketed families): a fixed 32 puts terabytes per bucket file
-    * at warehouse scale and 32 near-empty files on a gate-sized corpus.
-    * [[refresh]] passes the LIVE generation's width through, and
-    * extend/compact always read the width from the catalog. */
+    * `buckets` ≤ 0 (the default) DERIVES one width for `_edges` and
+    * `_vectors` from the vector count ([[Bucketed.derivedBuckets]]:
+    * ⌈vectors / `spark.graft.rows.per.bucket`⌉ in [1, 4096]) — a fixed
+    * width puts terabytes per bucket file at warehouse scale and
+    * near-empty files on a small corpus, each costing every append and
+    * compaction a task and a file. [[refresh]] passes the LIVE
+    * generation's width through, and extend reads the width from the
+    * catalog. [[compact]] re-derives it from the live vector count and
+    * widens both tables when the graph has outgrown it. */
   def build(vecs: DataFrame, name: String, k: Int = 8, rounds: Int = 2,
       numCentroids: Int = 16, buckets: Int = -1): Unit = {
     val spark = vecs.sparkSession
@@ -277,8 +280,8 @@ object AnnGraphIndex {
     // dedupe the bidirectional union: an intra-batch MUTUAL pair (a picks
     // b, b picks a) appears in kept both ways, so a bare union would
     // append the same (src, dst) twice
-    val ne = bucketsOf(spark, s"${name}_edges")
-    val nv = bucketsOf(spark, s"${name}_vectors")
+    val ne = Bucketed.bucketsOf(spark, s"${name}_edges")
+    val nv = Bucketed.bucketsOf(spark, s"${name}_vectors")
     // grid-aligned appends (the compactBucketed alignment trick: same
     // Murmur3, task i == bucket i) so every extend leaves exactly ONE
     // file per touched bucket — a bucketed append does not shuffle on
@@ -508,7 +511,11 @@ object AnnGraphIndex {
     * degree cap at rest, re-derive each cell's entry rep from the
     * retained members, then retire the log. Both rewrites ride the
     * crash-safe staging-rename ([[Bucketed.replaceTable]]); the log
-    * clears last, so a crash anywhere replays into the same end state. */
+    * clears last, so a crash anywhere replays into the same end state.
+    * The live vector count re-derives the tables' width
+    * ([[Bucketed.grownBuckets]]): when it calls for more buckets than
+    * stored, both tables are rewritten at the wider width (the spec
+    * rides the rename); the width never shrinks. */
   def compact(spark: SparkSession, name: String): Unit = {
     healedTables(spark, name)
     val log = Tombstones.of(spark, name)
@@ -542,8 +549,10 @@ object AnnGraphIndex {
         Materialize(kept.join(dropsSym, Seq("src", "dst"), "left_anti"))
       }
     val vectors = Materialize(retained(spark.table(s"${name}_vectors"), "vec_id"))
-    val nb = bucketsOf(spark, s"${name}_edges")
-    val nv = bucketsOf(spark, s"${name}_vectors")
+    // one live count feeds the stored count and both tables' width
+    val nvec = vectors.count()
+    val nb = Bucketed.grownBuckets(spark, s"${name}_edges", nvec)
+    val nv = Bucketed.grownBuckets(spark, s"${name}_vectors", nvec)
     // density is a maintenance-time quantity: recompute from the rewritten
     // edge set (the materialized frame — identical to the new table's
     // content) so the adaptive serve knobs track the post-purge graph.
@@ -571,7 +580,7 @@ object AnnGraphIndex {
         props = Seq(KProp -> k.toString, CapProp -> capv.toString,
           DensityProp -> density.toString, OvercapProp -> "false",
           CentsProp -> storedInt(spark, name, CentsProp, 16).toString,
-          NvecProp -> vectors.count().toString))
+          NvecProp -> nvec.toString))
       Tombstones.clear(spark, name)
     } else
       // no entries rewrite — a plain catalog ALTER refreshes the knobs
@@ -580,7 +589,7 @@ object AnnGraphIndex {
       // collapse in the rewrite above)
       TableProps.set(spark, s"${name}_entries",
         DensityProp -> density.toString, OvercapProp -> "false",
-        NvecProp -> vectors.count().toString)
+        NvecProp -> nvec.toString)
   }
 
   /** Graph-quality RENORMALIZATION — the rebuild-and-deploy loop that
@@ -606,7 +615,7 @@ object AnnGraphIndex {
       spark.table(s"${name}_vectors").select(col("vec_id"), col("v")),
       name, "vec_id"))
     val staging = name + "__refresh"
-    val nb = bucketsOf(spark, s"${name}_edges")
+    val nb = Bucketed.bucketsOf(spark, s"${name}_edges")
     build(vecs, staging, kk, rounds, nc, nb)
     swapIn(spark, staging, name)
   }
@@ -624,12 +633,6 @@ object AnnGraphIndex {
     healedTables(spark, live)
     TableSwap.swapIn(spark, staging, live, Suffixes)
   }
-
-  private def bucketsOf(spark: SparkSession, t: String): Int =
-    spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
-      .bucketSpec.getOrElse(sys.error(s"$t is not a bucketed index table"))
-      .numBuckets
 
   private def healedTables(spark: SparkSession, name: String): Unit =
     Suffixes.foreach(s => Bucketed.healInterruptedReplace(spark, name + s))

@@ -184,7 +184,6 @@ object DedupIndex {
       name: String): Unit = {
     val spark = docs.sparkSession
     healedTables(spark, name)
-    def bucketsOf(t: String): Int = DedupIndex.bucketsOf(spark, t)
     // On a clustered index ONE shingling pass feeds both the signature leg
     // and the cluster leg (they consumed two separate wordShingles scans
     // before — round-11 VERDICT item 6); the plain index skips the extra
@@ -214,7 +213,7 @@ object DedupIndex {
         // grid-aligned append: one file per touched bucket regardless of
         // the batch's shuffle width (the Bucketed.writeBucketed
         // discipline)
-        val ns = bucketsOf(s"${name}_sigs")
+        val ns = Bucketed.bucketsOf(spark, s"${name}_sigs")
         sigs.repartition(ns, col("doc_id")).write.mode("append")
           .bucketBy(ns, "doc_id")
           .sortBy("doc_id").format("parquet").saveAsTable(s"${name}_sigs")
@@ -228,12 +227,6 @@ object DedupIndex {
       }) ++ raw.toSeq.map(r => () =>
         extendClusters(docs, r, name, storedThreshold(spark, name)))))
   }
-
-  private def bucketsOf(spark: SparkSession, t: String): Int =
-    spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
-      .bucketSpec.getOrElse(sys.error(s"$t is not a bucketed index table"))
-      .numBuckets
 
   /** Heal any interrupted staging-rename before reading or appending —
     * the [[graft.analytics.LexIndex]] discipline applied to this family's
@@ -258,7 +251,9 @@ object DedupIndex {
     * the crash-safe [[Bucketed.replaceTable]] with `graft.parts` (and, on
     * `_bands`, `graft.est.threshold`) re-stamped before the rename — so an
     * index built small does not stay under-sliced as the stream grows it.
-    * The grid never shrinks. DedupIndexSpec pins answers-unchanged,
+    * The bucketed tables grow the same way: each rewrite re-derives its
+    * width from its live rows ([[Bucketed.grownBuckets]]). Neither the
+    * grid nor a width ever shrinks. DedupIndexSpec pins answers-unchanged,
     * file-count collapse, preserved bucket spec and the growth path. */
   def compact(spark: SparkSession, name: String): Unit = {
     healedTables(spark, name)
@@ -640,7 +635,7 @@ object DedupIndex {
       () => timed("cluext.append")(graft.functions.Par.inParallel(Seq(
         () => timed("cluext.append.shg") {
           // grid-aligned append (the Bucketed.writeBucketed discipline)
-          val nh = bucketsOf(spark, s"${name}_shg")
+          val nh = Bucketed.bucketsOf(spark, s"${name}_shg")
           batch.repartition(nh, col("doc_id")).write.mode("append")
             .bucketBy(nh, "doc_id")
             .sortBy("doc_id").format("parquet").saveAsTable(s"${name}_shg")
@@ -838,7 +833,8 @@ object DedupIndex {
         val folded = Materialize(clusterMap(spark, name)
           .select(col("doc_id"), col("canonical_id").as("label"),
             lit(0L).as("ver")))
-        val nb = bucketsOf(spark, s"${name}_clusters")
+        val nb = Bucketed.grownBuckets(spark, s"${name}_clusters",
+          folded.count())
         Bucketed.replaceTable(spark, s"${name}_clusters", { staging =>
           folded.repartition(nb, col("doc_id")).write.bucketBy(nb, "doc_id")
             .sortBy("doc_id").format("parquet").saveAsTable(staging)
@@ -852,7 +848,7 @@ object DedupIndex {
   private def appendClusterRows(spark: SparkSession, name: String,
       rows: DataFrame): Unit = {
     // grid-aligned append (the Bucketed.writeBucketed discipline)
-    val nb = bucketsOf(spark, s"${name}_clusters")
+    val nb = Bucketed.bucketsOf(spark, s"${name}_clusters")
     rows.repartition(nb, col("doc_id")).write.mode("append").bucketBy(nb, "doc_id")
       .sortBy("doc_id").format("parquet").saveAsTable(s"${name}_clusters")
   }

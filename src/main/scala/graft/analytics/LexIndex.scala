@@ -54,10 +54,13 @@ object LexIndex {
   /** Build (or rebuild) the index over a corpus of (doc_id, text) — ONE
     * tokenize pass: postings materialize once, dl derives from them
     * ([[dlFromPostings]]) instead of re-exploding the corpus. `buckets`
-    * ≤ 0 (the default) derives the width from the postings cardinality
-    * ([[Bucketed.derivedBuckets]] — auto-sizing, not a fixed 32 that is
-    * wrong at both scale extremes); extends and probes read the width
-    * from the catalog either way. */
+    * ≤ 0 (the default) derives one width for `_postings` and `_dl` from
+    * the postings cardinality ([[Bucketed.derivedBuckets]]: ⌈postings /
+    * `spark.graft.rows.per.bucket`⌉ in [1, 4096] — a fixed width is wrong
+    * at both scale extremes, and every surplus bucket costs each stream
+    * batch a task and a file). Extends and probes read the width from the
+    * catalog either way; [[compact]] re-derives each table's width from
+    * its live rows and only ever widens it. */
   def build(docs: DataFrame, name: String, buckets: Int = -1): Unit = {
     val postings = Materialize(postingsOf(docs))
     val b =
@@ -290,12 +293,6 @@ object LexIndex {
     }
   }
 
-  private[graft] def bucketsOf(spark: SparkSession, t: String): Int =
-    spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
-      .bucketSpec.getOrElse(sys.error(s"$t is not a bucketed index table"))
-      .numBuckets
-
   /** Heal any interrupted staging-rename on the index's replaceTable-
     * managed tables before reading or appending: a crash in a compact's
     * (or the stats fold's) DROP→RENAME gap leaves the live name gone with
@@ -315,14 +312,14 @@ object LexIndex {
     * at-least-once appends are NOT acceptable and exactly-once must be
     * assembled per table (see LexIndexStream). */
   private[graft] def appendPostings(docs: DataFrame, name: String): Unit = {
-    val n = bucketsOf(docs.sparkSession, s"${name}_postings")
+    val n = Bucketed.bucketsOf(docs.sparkSession, s"${name}_postings")
     postingsOf(docs).repartition(n, col("term")).write.mode("append")
       .bucketBy(n, "term")
       .sortBy("term").format("parquet").saveAsTable(s"${name}_postings")
   }
 
   private[graft] def appendDl(docs: DataFrame, name: String): Unit = {
-    val n = bucketsOf(docs.sparkSession, s"${name}_dl")
+    val n = Bucketed.bucketsOf(docs.sparkSession, s"${name}_dl")
     dlOf(docs).repartition(n, col("doc_id")).write.mode("append")
       .bucketBy(n, "doc_id")
       .sortBy("doc_id").format("parquet").saveAsTable(s"${name}_dl")
@@ -335,10 +332,20 @@ object LexIndex {
   /** Append a batch of NEW documents into the existing layout — ONE
     * tokenize pass over the batch (the old shape tokenized it three
     * times: postings, dl, stats delta); dl and the delta derive from the
-    * materialized postings ([[dlFromPostings]]). Append order (postings,
-    * dl, stats) is unchanged. The marker-guarded streaming twin
-    * (LexIndexStream) keeps the standalone append verbs: each of its
-    * appends must be independently replayable against its own marker. */
+    * materialized postings ([[dlFromPostings]]).
+    *
+    * The appends fan on two driver threads: the postings append runs
+    * beside the dl→stats chain. Within that chain dl still lands before
+    * stats, so the delta log never runs ahead of the doc lengths it
+    * summarizes. Across the fan there is no order: a crash can leave dl
+    * and stats durable with the postings append torn — a torn state the
+    * old sequential order (postings, dl, stats) did not have. Re-running
+    * this verb does not heal it (it is not idempotent: a re-run appends
+    * dl, stats and any landed postings a second time); the marker-guarded
+    * streaming twin (LexIndexStream) is the exactly-once path — it keeps
+    * the standalone append verbs, each replayable against its own marker.
+    * An idempotent batch extend (a commit log shared with the streaming
+    * loops) is not built yet. */
   def extend(docs: DataFrame, name: String): Unit = {
     val spark = docs.sparkSession
     healedTables(spark, name)
@@ -346,8 +353,8 @@ object LexIndex {
     val dl = Materialize(dlFromPostings(postings))
     // grid-aligned appends (the Bucketed.writeBucketed discipline): one
     // file per touched bucket regardless of the batch's shuffle width
-    val nt = bucketsOf(spark, s"${name}_postings")
-    val nd = bucketsOf(spark, s"${name}_dl")
+    val nt = Bucketed.bucketsOf(spark, s"${name}_postings")
+    val nd = Bucketed.bucketsOf(spark, s"${name}_dl")
     // the postings append and the dl→stats chain write DISJOINT tables —
     // fan them (guide §2.6, the buildFrom discipline). Both inputs are
     // checkpoints, so neither leg recomputes the tokenize; stats stays
@@ -423,8 +430,11 @@ object LexIndex {
     * ([[DedupIndex.compact]], [[AnnIndex.compact]]): both bucketed tables
     * rewrite to one file per bucket via [[Bucketed.compactBucketed]], and
     * the stats delta log folds to a single running-total row (snapshotted
-    * through [[Materialize]] before its own overwrite). Answer-preserving
-    * and idempotent — no marker needed in a streaming loop. */
+    * through [[Materialize]] before its own overwrite). Each bucketed
+    * rewrite re-derives its table's width from its live rows and widens a
+    * table the stream has outgrown ([[Bucketed.grownBuckets]]; never
+    * narrower). Answer-preserving and idempotent — no marker needed in a
+    * streaming loop. */
   def compact(spark: SparkSession, name: String): Unit = {
     // a prior compact may have died in ANY table's DROP→RENAME gap —
     // including the stats fold's, whose table this method reads directly

@@ -21,18 +21,38 @@ object Bucketed {
     * `derivedParts` discipline applied to the bucketed families: target
     * ≤ `spark.graft.rows.per.bucket` rows per bucket (default 1M — a few
     * hundred MB for the widest rows here, one task's comfortable write),
-    * clamped to [8, 4096]. A fixed default width is wrong at BOTH ends:
-    * 32 buckets over a warehouse-scale corpus puts terabytes in every
-    * bucket file (one writer task each), and 32 buckets over a gate-sized
-    * corpus pays 32 file opens per scan of a table that fits in one. The
-    * input is a count of an already-materialized frame — no extra source
-    * scan. Probes/appends/compacts always read the width from the catalog
-    * (`bucketSpec`), so a derived build changes nothing downstream. */
+    * clamped to [1, 4096]. There is no floor beyond one bucket: every
+    * bucket costs each append and each compaction a writer task and a
+    * file, and each scan a file open, so a width above what the rows call
+    * for is pure per-file overhead on a table one task reads. The ceiling
+    * bounds the per-file fan-out of a warehouse-scale table. The input is
+    * a count of an already-materialized frame — no extra source scan.
+    * Probes and appends read the width from the catalog ([[bucketsOf]]),
+    * so a derived build changes nothing downstream; a full rewrite
+    * ([[compactBucketed]], [[grownBuckets]]) re-applies the rule to the
+    * table's live rows and only ever widens, so an index built small
+    * does not stay at one bucket as a stream grows it. */
   def derivedBuckets(spark: SparkSession, rows: Long): Int = {
     val target = spark.conf.getOption("spark.graft.rows.per.bucket")
       .map(_.toLong).getOrElse(1L << 20)
-    math.max(8L, math.min(4096L, (rows + target - 1) / target)).toInt
+    math.max(1L, math.min(4096L, (rows + target - 1) / target)).toInt
   }
+
+  /** The stored bucket width of a bucketed table (its catalog
+    * `bucketSpec`). */
+  def bucketsOf(spark: SparkSession, table: String): Int =
+    spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
+      .bucketSpec.getOrElse(sys.error(s"$table is not a bucketed table"))
+      .numBuckets
+
+  /** The width a full rewrite of `table` writes at, given the `rows` it
+    * is about to write: the stored width, widened when [[derivedBuckets]]
+    * of the live rows exceeds it. Never narrower than the stored width —
+    * a one-file-per-bucket rewrite has already saved what a narrower
+    * width would. */
+  def grownBuckets(spark: SparkSession, table: String, rows: Long): Int =
+    math.max(bucketsOf(spark, table), derivedBuckets(spark, rows))
 
   def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int = 32): Unit = {
     import org.apache.spark.sql.functions.col
@@ -183,22 +203,22 @@ object Bucketed {
     * severs the bucketing claim, so the repartition survives and task i
     * holds exactly bucket i (repartition and the bucketed writer share
     * Murmur3 hashing). The bucket spec travels with the closing RENAME
-    * (same property the generation swap relies on). */
+    * (same property the generation swap relies on), so the pass is also
+    * where the width GROWS: the snapshot's row count re-derives it
+    * ([[grownBuckets]]), and the staging generation is written at the
+    * wider width when the live rows call for one. It never shrinks. */
   def compactBucketed(spark: SparkSession, table: String, key: String,
       transform: DataFrame => DataFrame = identity): Unit = {
     import org.apache.spark.sql.functions.col
     healInterruptedReplace(spark, table)
-    val n = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(table))
-      .bucketSpec.getOrElse(sys.error(s"$table is not a bucketed table"))
-      .numBuckets
     // `transform` lets the rewrite fold in answer-preserving maintenance the
     // caller already owes — the indexes pass their tombstone anti-join here,
     // making compaction the physical purge point (Tombstones' copy-on-write
     // half). It runs BEFORE the snapshot so the rewrite never materializes
     // rows it is about to drop.
-    val snap = graft.functions.Materialize(transform(spark.table(table)))
-      .repartition(n, col(key))
+    val snap0 = graft.functions.Materialize(transform(spark.table(table)))
+    val n = grownBuckets(spark, table, snap0.count())
+    val snap = snap0.repartition(n, col(key))
     CrashPoints.reached("compact.snapshotted")
     replaceTable(spark, table, staging =>
       snap.write.bucketBy(n, key).sortBy(key).format("parquet")
@@ -265,18 +285,27 @@ object Bucketed {
     * per touched partition (`partCol` must already be derived with the
     * stored modulus — see [[partsOf]]).
     *
-    * Width = one task per TOUCHED slice (see [[writePartitioned]] — the
-    * round-14 measured fix; at a warehouse-scale grid a batch's band keys
-    * touch O(min(batch keys, parts)) slices, and the old session-width
-    * bunching serialized ~dozens of per-file costs per task: 3.6/12/25 s
-    * at 256/1024/4096 parts for one fixed batch, ~13 ms per slice, all of
-    * it task-side). The batch is materialized once — the distinct-count
-    * decides the width, the write reuses the snapshot. */
+    * Width = one task per slice (see [[writePartitioned]] — the round-14
+    * measured fix: the old session-width bunching serialized ~dozens of
+    * per-file costs per task, 3.6/12/25 s at 256/1024/4096 parts for one
+    * fixed batch, ~13 ms per slice, all of it task-side). A grid no wider
+    * than the session's default parallelism writes at the stored modulus
+    * directly — an untouched slice's task is empty and writes no file, so
+    * sizing the write costs no job. A wider grid (a warehouse-scale batch
+    * touches O(min(batch keys, parts)) slices) materializes the batch
+    * once, counts its distinct slices for the width, and writes from the
+    * snapshot. */
   def appendPartitioned(df: DataFrame, table: String, partCol: String): Unit = {
     import org.apache.spark.sql.functions.col
-    val snap = graft.functions.Materialize(df)
-    val touched = snap.select(col(partCol)).distinct().count().toInt.max(1)
-    snap.repartition(touched, col(partCol)).write.mode("append")
+    val spark = df.sparkSession
+    val parts = partsOf(spark, table)
+    val (in, width) =
+      if (parts <= spark.sparkContext.defaultParallelism) (df, parts)
+      else {
+        val snap = graft.functions.Materialize(df)
+        (snap, snap.select(col(partCol)).distinct().count().toInt.max(1))
+      }
+    in.repartition(width, col(partCol)).write.mode("append")
       .format("parquet").partitionBy(partCol).saveAsTable(table)
   }
 

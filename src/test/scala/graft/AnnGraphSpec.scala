@@ -411,9 +411,20 @@ class AnnGraphSpec extends SparkSpec {
     assert(graft.sink.TableProps.get(spark, s"${name}_entries", "graft.nvec")
       .get.toLong == n0 + 1, "extend did not advance the stored count")
     AnnGraphIndex.delete(Seq(8000001L).toDF("vec_id"), name)
-    AnnGraphIndex.compact(spark, name)
+    // the same live count re-derives the width: a default build of this
+    // corpus fits one bucket, and a tiny rows-per-bucket target makes the
+    // compaction widen both tables to ⌈live vectors / target⌉
+    def widthOf(s: String) = graft.sink.Bucketed.bucketsOf(spark, name + s)
+    assert(widthOf("_edges") == 1 && widthOf("_vectors") == 1,
+      s"default build of $n0 vectors not one bucket")
+    spark.conf.set("spark.graft.rows.per.bucket", "100")
+    try AnnGraphIndex.compact(spark, name)
+    finally spark.conf.unset("spark.graft.rows.per.bucket")
     assert(graft.sink.TableProps.get(spark, s"${name}_entries", "graft.nvec")
       .get.toLong == n0, "compact did not re-derive the exact count")
+    val grown = ((n0 + 99) / 100).toInt
+    assert(grown > 1 && widthOf("_edges") == grown && widthOf("_vectors") == grown,
+      s"compact widths ${widthOf("_edges")}/${widthOf("_vectors")}, expected $grown")
     // two SEQUENTIAL extends stay exact — the verb's contract is
     // single-writer (concurrent extends of one index are the caller's
     // bug), not single-use: repeated serialized bumps must accumulate

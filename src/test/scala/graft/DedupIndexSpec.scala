@@ -10,7 +10,7 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** Spark jobs of one DedupIndexStream batch (probe, survivor write,
     * extend, full compaction) on a one-slice index. */
-  private val DedupBatchJobs = 29
+  private val DedupBatchJobs = 27
 
   private def docs = Tables.documents(spark, sf("sf0.01"))
     .select(col("doc_id"), col("text"),
@@ -439,7 +439,6 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("job-count pin: one standing batch with a full compaction on a default-built index") {
     import spark.implicits._
     import graft.streaming.DedupIndexStream
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val name = "spec_idx_jobs"
     DedupIndex.build(docs.filter(col("cb") >= 50).select("doc_id", "text"),
       name, buckets = 4)
@@ -448,38 +447,13 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .select("doc_id", "text").limit(10).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq.toDF("doc_id", "text")
       .localCheckpoint()
-    // jobs the batch submits — tagged by a local property its Par threads
-    // and Spark's broadcast/stage threads inherit — counted by a listener;
-    // a sentinel job flushes the asynchronous listener bus (a listener
-    // receives events in order)
-    val Tag = "graft.spec.jobpin"
-    val Sentinel = "graft.spec.sentinel"
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    def tagged(e: SparkListenerJobStart, key: String): Boolean =
-      Option(e.properties).exists(_.getProperty(key) != null)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (tagged(e, Sentinel)) flushed.countDown()
-        else if (tagged(e, Tag)) started.incrementAndGet()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(Tag, "1")
-      try DedupIndexStream.processBatch(spark, name, fresh, 0L,
-        java.nio.file.Files.createTempDirectory("didx_jobs").toString,
-        compactEvery = 1)
-      finally sc.setLocalProperty(Tag, null)
-      sc.setLocalProperty(Sentinel, "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(Sentinel, null)
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus not flushed")
-    } finally sc.removeSparkListener(listener)
-    info(s"jobs per standing batch: ${started.get} at $parts slice(s)")
+    val jobs = JobCount.of(spark)(DedupIndexStream.processBatch(spark, name,
+      fresh, 0L, java.nio.file.Files.createTempDirectory("didx_jobs").toString,
+      compactEvery = 1))
+    info(s"jobs per standing batch: $jobs at $parts slice(s)")
     assert(parts == 1, s"a small default build derived $parts slices")
-    assert(started.get == DedupBatchJobs,
-      s"one standing batch ran ${started.get} jobs (pinned $DedupBatchJobs)")
+    assert(jobs == DedupBatchJobs,
+      s"one standing batch ran $jobs jobs (pinned $DedupBatchJobs)")
     // the full compaction left one file per slice of the stored grid
     val loc = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_bands")).location

@@ -13,6 +13,19 @@ class LexIndexSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(_.toSeq).toSet
 
+  /** Spark jobs of one LexIndexStream batch (three marker-guarded appends
+    * and a compaction) on a one-bucket index. */
+  private val LexBatchJobs = 24
+
+  private def nFiles(t: String): Int = {
+    val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t)).location)
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.listStatus(loc).count(_.getPath.getName.endsWith(".parquet"))
+  }
+
+  private def widthOf(t: String): Int = graft.sink.Bucketed.bucketsOf(spark, t)
+
   test("index-served BM25 equals the from-scratch computation") {
     val corpus = docs.select("doc_id", "text")
     LexIndex.build(corpus, "spec_lex_eq", buckets = 4)
@@ -51,12 +64,6 @@ class LexIndexSpec extends SparkSpec {
     LexIndex.build(a, "spec_lex_cmp", buckets = 4)
     LexIndex.extend(b, "spec_lex_cmp")
     val before = rows(LexIndex.bm25Against(spark, "spec_lex_cmp"))
-    def nFiles(t: String): Int = {
-      val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
-        .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t)).location)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(loc).count(_.getPath.getName.endsWith(".parquet"))
-    }
     assert(nFiles("spec_lex_cmp_postings") > 4, "extend must have appended files")
     LexIndex.compact(spark, "spec_lex_cmp")
     assert(nFiles("spec_lex_cmp_postings") <= 4, "one file per bucket after compact")
@@ -65,6 +72,75 @@ class LexIndexSpec extends SparkSpec {
       .filter(col("col_name") === "Num Buckets").collect()
     assert(cat.length == 1 && cat(0).getString(1).trim == "4")
     assert(rows(LexIndex.bm25Against(spark, "spec_lex_cmp")) == before)
+  }
+
+  test("growth: compact widens a one-bucket build to its live rows; answers ≡ from-scratch") {
+    import graft.sink.Bucketed
+    // clamp boundaries of the pure derivation: a table that fits one
+    // bucket gets ONE, the next row opens a second
+    val target = 1L << 20
+    assert(Bucketed.derivedBuckets(spark, 0L) == 1, "floor")
+    assert(Bucketed.derivedBuckets(spark, target) == 1, "one full bucket")
+    assert(Bucketed.derivedBuckets(spark, target + 1) == 2, "first split")
+    assert(Bucketed.derivedBuckets(spark, Long.MaxValue / 2) == 4096, "ceiling")
+    val all = docs.select("doc_id", "text")
+    val a = docs.filter(col("cb") >= 40).select("doc_id", "text")
+    val b = docs.filter(col("cb") < 40).select("doc_id", "text")
+    val name = "spec_lex_grow"
+    LexIndex.build(a, name)
+    assert(widthOf(s"${name}_postings") == 1 && widthOf(s"${name}_dl") == 1,
+      "a default build of a small corpus is not one bucket")
+    LexIndex.extend(b, name)
+    // a rows-per-bucket target of a third of the docs: the compaction must
+    // re-derive each table's width from its own live rows
+    val tiny = (spark.table(s"${name}_dl").count() + 2) / 3
+    spark.conf.set("spark.graft.rows.per.bucket", tiny.toString)
+    try LexIndex.compact(spark, name)
+    finally spark.conf.unset("spark.graft.rows.per.bucket")
+    val widths = Seq("_postings" -> "term", "_dl" -> "doc_id").map { case (sfx, key) =>
+      val w = ((spark.table(name + sfx).count() + tiny - 1) / tiny).toInt
+      assert(w > 1 && widthOf(name + sfx) == w,
+        s"$sfx width ${widthOf(name + sfx)}, expected $w")
+      // one file per bucket that holds rows (the bucket id is the writer's
+      // Murmur3 pmod; the corpus's small vocabulary leaves postings
+      // buckets empty)
+      val live = spark.table(name + sfx)
+        .select(pmod(hash(col(key)), lit(w))).distinct().count()
+      assert(nFiles(name + sfx) == live,
+        s"$sfx holds ${nFiles(name + sfx)} files for $live non-empty of $w buckets")
+      sfx -> w
+    }
+    LexIndex.build(all, s"${name}_all", buckets = 4)
+    val scratch = rows(LexIndex.bm25Against(spark, s"${name}_all"))
+    assert(rows(LexIndex.bm25Against(spark, name)) == scratch,
+      "the widened index serves differently from a from-scratch build")
+    // a later compaction at the default target never narrows the tables
+    LexIndex.compact(spark, name)
+    widths.foreach { case (sfx, w) =>
+      assert(widthOf(name + sfx) == w, s"default compact changed $sfx to ${widthOf(name + sfx)}")
+    }
+    assert(rows(LexIndex.bm25Against(spark, name)) == scratch)
+  }
+
+  test("job-count pin: one standing batch with a compaction on a default-built index") {
+    import spark.implicits._
+    import graft.streaming.LexIndexStream
+    val name = "spec_lex_jobs"
+    LexIndex.build(docs.filter(col("cb") >= 50).select("doc_id", "text"), name)
+    val fresh = docs.filter(col("cb") >= 20 && col("cb") < 50)
+      .select("doc_id", "text").limit(10).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.toDF("doc_id", "text")
+      .localCheckpoint()
+    val jobs = JobCount.of(spark)(LexIndexStream.processBatch(spark, name,
+      fresh, 0L, java.nio.file.Files.createTempDirectory("lex_jobs").toString,
+      compactEvery = 1))
+    info(s"jobs per standing batch: $jobs")
+    assert(jobs == LexBatchJobs,
+      s"one standing batch ran $jobs jobs (pinned $LexBatchJobs)")
+    Seq("_postings", "_dl").foreach { sfx =>
+      assert(widthOf(name + sfx) == 1 && nFiles(name + sfx) == 1,
+        s"$sfx: ${nFiles(name + sfx)} files for ${widthOf(name + sfx)} buckets")
+    }
   }
 
   test("streaming loop: batches extend the index exactly once, replay and partial commits heal") {
