@@ -140,24 +140,6 @@ object BpeInduction {
     out.result()
   }
 
-  /** The round-14 expression formulation of one induction round, retained
-    * as the spec's bit-parity oracle for [[mergesOnDriver]] (the engine
-    * semantics the q164 DuckDB oracle restates are DEFINED by this
-    * replace): argmax pair of `words`, then the merged word table. */
-  private[graft] def expressionRound(words: DataFrame, r: Int): (DataFrame, DataFrame) = {
-    val best = Materialize(pairCounts(words)
-      .orderBy(col("cnt").desc, col("pa").asc, col("pb").asc).limit(1)
-      .select(lit(r).as("round"), col("pa"), col("pb"),
-        concat(col("pa"), col("pb")).as("merged"), col("cnt")))
-    val merged = words.crossJoin(broadcast(best))
-      .withColumn("seq", expr(
-        """trim(replace(concat(' ', seq, ' '),
-          | concat(' ', pa, '  ', pb, ' '),
-          | concat(' ', merged, ' ')))""".stripMargin))
-      .select(col("word"), col("freq"), col("seq"))
-    (best, merged)
-  }
-
   /** q165: TOKENIZE with the learned vocabulary — apply the `rounds`
     * learned merges, in order, to EVERY distinct word in the corpus (not
     * just the capped training vocabulary: a merge like (t,h) applies to

@@ -830,11 +830,10 @@ object DedupIndex {
       () => {
         // the fold reads only _clusters ⊕ _labelmap ⊕ the log — disjoint
         // from the shingle/prefix rewrites, so it rides its own leg
-        val folded = Materialize(clusterMap(spark, name)
+        val (folded, rows) = Materialize.counted(clusterMap(spark, name)
           .select(col("doc_id"), col("canonical_id").as("label"),
             lit(0L).as("ver")))
-        val nb = Bucketed.grownBuckets(spark, s"${name}_clusters",
-          folded.count())
+        val nb = Bucketed.grownBuckets(spark, s"${name}_clusters", rows)
         Bucketed.replaceTable(spark, s"${name}_clusters", { staging =>
           folded.repartition(nb, col("doc_id")).write.bucketBy(nb, "doc_id")
             .sortBy("doc_id").format("parquet").saveAsTable(staging)

@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.SmallInput
 import graft.ingest.{ListingFixtures, Normalize}
 
 /** Batch views over normalized listings — the reference's entire
@@ -11,13 +12,20 @@ import graft.ingest.{ListingFixtures, Normalize}
   * per-district statistics layer (SURVEY.md §7.2 step 6).
   *
   * All views take an already-normalized listing DataFrame, so the same plans
-  * run on the fixture corpus (tests/oracle) and on a real warehouse table. */
+  * run on the fixture corpus (tests/oracle) and on a real warehouse table.
+  *
+  * Small input, one task: when the listings' size estimate is within one
+  * file open ([[SmallInput]]) — one ingest date of the raw zone, the
+  * fixture corpus — each view first coalesces them to one partition. The
+  * aggregate and the window are then satisfied by `SinglePartition` and
+  * plan no exchange, so a collect is one job instead of two under AQE.
+  * Larger inputs keep the shuffled plan; the answers are the same. */
 object Views {
 
   /** The reference's flagship: count listings per district, dropping
     * null/empty districts (P1+P2+A1). */
   def districtCounts(listings: DataFrame): DataFrame =
-    listings
+    SmallInput.narrowed(listings)
       .select(col("quan_huyen"))
       .filter(col("quan_huyen").isNotNull && col("quan_huyen") =!= "")
       .groupBy(col("quan_huyen"))
@@ -26,7 +34,7 @@ object Views {
   /** Extended: per-district price stats over priced listings
     * (price_status = ok), including price per m². */
   def districtPriceStats(listings: DataFrame): DataFrame =
-    listings
+    SmallInput.narrowed(listings)
       .filter(col("quan_huyen").isNotNull && col("price_status") === "ok")
       .groupBy(col("quan_huyen"))
       .agg(
@@ -41,7 +49,7 @@ object Views {
   def topKPerDistrict(listings: DataFrame, k: Int = 3): DataFrame = {
     val w = Window.partitionBy(col("quan_huyen"))
       .orderBy(col("price_billion_vnd").desc, col("id").asc)
-    listings
+    SmallInput.narrowed(listings)
       .filter(col("quan_huyen").isNotNull && col("price_status") === "ok")
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= k)

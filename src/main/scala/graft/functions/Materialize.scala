@@ -1,6 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Lineage-cutting materialization with a cluster-durability toggle.
   *
@@ -30,5 +31,15 @@ object Materialize {
         df.checkpoint()
       case _ => df.localCheckpoint()
     }
+  }
+
+  /** [[apply]] plus the materialized row count, observed inside the
+    * materializing job: no job of its own. A `Dataset.count` of the
+    * snapshot would add two (its aggregate's exchange runs as a separate
+    * job under AQE). */
+  def counted(df: DataFrame): (DataFrame, Long) = {
+    val obs = Observation()
+    val snap = apply(df.observe(obs, count(lit(1)).as("n")))
+    (snap, obs.get("n").asInstanceOf[Long])
   }
 }

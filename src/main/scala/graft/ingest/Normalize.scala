@@ -22,12 +22,19 @@ object Normalize {
     * NFD-encoded input (combining diacritics, which crawled HTML does carry)
     * would otherwise silently miss every match. The reference has the same
     * latent bug (alonhadat.py:112-123); here the contract is explicit and
-    * fixture row 9 (NFD-encoded) pins it under the oracle gate. */
+    * fixture row 9 (NFD-encoded) pins it under the oracle gate.
+    *
+    * `asOf` is bound by reference ([[graft.functions.Bind]]): a constant
+    * date reaches the generated code as a reference slot, not a Java
+    * literal, so every ingest date runs the same compiled stage instead of
+    * compiling its own. A non-constant `asOf` (a per-row column) is
+    * evaluated as before. */
   def fromSiteText(raw: DataFrame, asOf: Column): DataFrame = {
+    import graft.functions.Bind
     import graft.functions.UnicodeNorm.nfc
     raw.select(
       col("id"),
-      parsePostDate(nfc(col("raw_post_date")), asOf).as("post_date"),
+      parsePostDate(nfc(col("raw_post_date")), Bind(asOf)).as("post_date"),
       street(nfc(col("raw_address"))).as("duong_pho"),
       ward(nfc(col("raw_address"))).as("phuong_xa"),
       district(nfc(col("raw_address"))).as("quan_huyen"),

@@ -216,8 +216,8 @@ object Bucketed {
     // making compaction the physical purge point (Tombstones' copy-on-write
     // half). It runs BEFORE the snapshot so the rewrite never materializes
     // rows it is about to drop.
-    val snap0 = graft.functions.Materialize(transform(spark.table(table)))
-    val n = grownBuckets(spark, table, snap0.count())
+    val (snap0, rows) = graft.functions.Materialize.counted(transform(spark.table(table)))
+    val n = grownBuckets(spark, table, rows)
     val snap = snap0.repartition(n, col(key))
     CrashPoints.reached("compact.snapshotted")
     replaceTable(spark, table, staging =>
@@ -244,8 +244,9 @@ object Bucketed {
     * partitioned write is per-FILE task-side cost — parquet open/close,
     * task setup/commit — and `repartition(partCol)` at the session's
     * default shuffle width bunches dozens of slices into each task, which
-    * writes their files SEQUENTIALLY; AppendProbe measured 23 s → 7.6 s on
-    * a 1958-slice append by widening. NOT the job-commit renames — the v2
+    * writes their files SEQUENTIALLY; widening took a 1958-slice append
+    * from 25.7 s to 6.5 s — OPTIMIZATION_r14.md and SCALING.md record the
+    * AppendProbe measurement. NOT the job-commit renames — the v2
     * committer measured identical). `repartition(parts, partCol)` keeps
     * the one-file-per-slice layout and parallelizes the per-file cost; a
     * build populates ~every slice, so `parts` is the natural width. */

@@ -1,11 +1,30 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.analytics.BpeInduction
 
 /** BPE merge induction (q164). */
 class BpeInductionSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The round-14 expression formulation of one induction round, the
+    * bit-parity oracle for `BpeInduction.mergesOnDriver` (the engine
+    * semantics the q164 DuckDB oracle restates are DEFINED by this
+    * replace): argmax pair of `words`, then the merged word table. */
+  private def expressionRound(words: DataFrame, r: Int): (DataFrame, DataFrame) = {
+    val best = graft.functions.Materialize(BpeInduction.pairCounts(words)
+      .orderBy(col("cnt").desc, col("pa").asc, col("pb").asc).limit(1)
+      .select(lit(r).as("round"), col("pa"), col("pb"),
+        concat(col("pa"), col("pb")).as("merged"), col("cnt")))
+    val merged = words.crossJoin(broadcast(best))
+      .withColumn("seq", expr(
+        """trim(replace(concat(' ', seq, ' '),
+          | concat(' ', pa, '  ', pb, ' '),
+          | concat(' ', merged, ' ')))""".stripMargin))
+      .select(col("word"), col("freq"), col("seq"))
+    (best, merged)
+  }
 
   test("hand corpus: learns the engineered merges in order") {
     // "aaab" x10, "aab" x5: pair (a,a) dominates (10·2 + 5·1 = 25), then
@@ -176,7 +195,7 @@ class BpeInductionSpec extends SparkSpec {
           .map(r => (r.getString(0), r.getLong(1))).toSeq, 4)
       var w = words
       val viaExpr = (1 to 4).map { r =>
-        val (best, merged) = BpeInduction.expressionRound(w, r)
+        val (best, merged) = expressionRound(w, r)
         w = graft.functions.Materialize(merged)
         val b = best.collect()(0)
         (b.getInt(0), b.getString(1), b.getString(2), b.getString(3), b.getLong(4))

@@ -10,7 +10,7 @@ class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** Spark jobs of one DedupIndexStream batch (probe, survivor write,
     * extend, full compaction) on a one-slice index. */
-  private val DedupBatchJobs = 27
+  private val DedupBatchJobs = 25
 
   private def docs = Tables.documents(spark, sf("sf0.01"))
     .select(col("doc_id"), col("text"),

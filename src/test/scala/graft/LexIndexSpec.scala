@@ -15,7 +15,7 @@ class LexIndexSpec extends SparkSpec {
 
   /** Spark jobs of one LexIndexStream batch (three marker-guarded appends
     * and a compaction) on a one-bucket index. */
-  private val LexBatchJobs = 24
+  private val LexBatchJobs = 20
 
   private def nFiles(t: String): Int = {
     val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
