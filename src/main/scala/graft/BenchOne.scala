@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time individual queries. Usage:
   *   runMain graft.BenchOne <sfDir> <queryName> [queryName...]
   * Materializes through the noop sink exactly like Bench — count() lets
@@ -16,16 +14,7 @@ object BenchOne {
     val sfDir = args.head
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(",").filter(_.contains("="))
       .foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

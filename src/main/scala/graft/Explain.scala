@@ -1,23 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for plan-shape review.
   * Usage: runMain graft.Explain <sfDir> [queryName...] */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.head
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("4", logLevel = "ERROR")
     names.foreach { name =>
       println(s"\n########## $name ##########")
       try println(SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(

@@ -22,15 +22,7 @@ import graft.sink.BatchViews
 object Pipeline {
   def main(args: Array[String]): Unit = {
     val Array(rawPath, warehouse, ingestDate) = args.take(3)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"), confs = Nil)
     run(spark, rawPath, warehouse, ingestDate)
     spark.stop()
   }

@@ -73,20 +73,11 @@ object ScaleRehearsal {
       .split(",").map(_.trim.toInt).toSeq
     val outBase = "target/scale"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // growth measurements must be COLD: the default-ON SessionMemo would
-      // hand every repeat (and every dependent operator) the materialized
-      // result, turning the 1x-20x curves into cache-scan noise
-      .config("spark.graft.pairgraph.cache", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // growth measurements must be COLD: the default-ON SessionMemo would
+    // hand every repeat (and every dependent operator) the materialized
+    // result, turning the 1x-20x curves into cache-scan noise
+    val spark = LocalSession(cpus,
+      Seq(LocalSession.NanosAsLong, "spark.graft.pairgraph.cache" -> "false"))
     spark.range(1000000L).selectExpr("sum(id)").collect() // JIT/codegen warmup
 
     def probe(): Double = {

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -14,19 +13,7 @@ object Verify {
     // 217-query dump. SPARK_GRAFT_CPUS still pins it explicitly.
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Permissive cast/parse semantics (null-on-failure) — the engine's
-      // documented contract (SURVEY.md §1.2); expressions are also
-      // regex-gated so they are ANSI-safe either way.
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus)
     new java.io.File(outDir).mkdirs()
     // Per-query wall time on stderr: the round-8 gate starved on WALL
     // TIME, not wrong answers — keep the cost of every gate visible so a

@@ -132,12 +132,10 @@ object AnnGraphIndex {
     val ids = vecs.select(col("vec_id"), col("v"))
     val cents = timed("gxbuild.cents")(
       Materialize(Similarity.trainCentroidsOn(ids, numCentroids)))
-    val cells = timed("gxbuild.cells")(
-      Materialize(Similarity.assignCellsOn(ids, cents)))
-    // the exact vector count was a fanned leg of the write barrier below;
-    // the derived width needs it BEFORE the writes, and a count on the
-    // materialized cells frame is one cheap job either way
-    val nvec = timed("gxbuild.count")(cells.count())
+    // the derived width needs the vector count BEFORE the writes: the job
+    // that materializes the cells observes it
+    val (cells, nvec) = timed("gxbuild.cells")(
+      Materialize.counted(Similarity.assignCellsOn(ids, cents)))
     val width =
       if (buckets > 0) buckets else Bucketed.derivedBuckets(spark, nvec)
     val g = AnnGraph.buildGraphFromCells(cells, k, rounds)

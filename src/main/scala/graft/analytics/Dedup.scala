@@ -357,8 +357,8 @@ object Dedup {
   private val MinhashPerms = 64
   private[analytics] val NumBands = 16 // 16 bands × 4 rows: P(catch) ≈ 1 at jaccard 0.6+
 
-  /** 64-slot MinHash signature — the codegen'd Catalyst expression
-    * (graft.functions.Sketches.MinHashSignature): each shingle hashed once,
+  /** 64-slot MinHash signature — the codegen'd `minhash_signature` kernel
+    * (graft.functions.Sketches.minhashKernel): each shingle hashed once,
     * permutations derived arithmetically. No explode, no shuffle — the whole
     * signature computes inside the scan's project. (The naive
     * `transform(sequence(...), p => array_min(transform(sh, xxhash64)))`
@@ -435,8 +435,8 @@ object Dedup {
       .select(col("doc_id"), minhashSignature(wordShingles(col("text"))).as("mhs")))
 
   /** 64-bit SimHash of the shingle set: per-bit majority vote over shingle
-    * hashes, via the codegen'd Sketches.SimHash64 expression (no UDF, no
-    * shuffle, one hash per shingle). */
+    * hashes, via the codegen'd `simhash64` kernel (Sketches.simhashKernel;
+    * no UDF, no shuffle, one hash per shingle). */
   def simhash64(sh: Column): Column = Sketches.simhash64(sh)
 
   /** q27: SimHash near-duplicate pairs with Hamming distance ≤ 3, found via

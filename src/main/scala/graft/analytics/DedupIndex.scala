@@ -74,30 +74,36 @@ object DedupIndex {
     * [[nearDupsAgainst]] applies by default — persisted with the index so
     * two callers probing the same corpus get the same dedup semantics. */
   def build(docs: DataFrame, name: String, buckets: Int = -1,
-      parts: Int = -1, estThreshold: Double = 0.5): Unit =
-    buildFromSigs(Materialize(sigsOf(docs)), name, buckets, parts, estThreshold)
+      parts: Int = -1, estThreshold: Double = 0.5): Unit = {
+    val (sigs, n) = Materialize.counted(sigsOf(docs))
+    val (b, p) = widths(docs.sparkSession, n, buckets, parts)
+    buildFromSigs(sigs, name, b, p, estThreshold)
+  }
 
-  /** [[build]] from a precomputed signature frame — lets the q212/q216
-    * gate twins share ONE memoized signature pass where independent-build
-    * semantics are not the thing under test (round-9 VERDICT item 4). */
+  /** The (buckets, parts) widths of a build over `n` signatures: a
+    * positive argument is kept, one ≤ 0 is derived from `n`
+    * ([[Bucketed.derivedBuckets]], [[derivedParts]]). The count comes from
+    * the job that materialized the signatures ([[Materialize.counted]]). */
+  private def widths(spark: SparkSession, n: Long, buckets: Int, parts: Int): (Int, Int) =
+    (if (buckets > 0) buckets else Bucketed.derivedBuckets(spark, n),
+      if (parts > 0) parts else derivedParts(spark, n * Dedup.NumBands))
+
+  /** [[build]] from a precomputed signature frame at given widths — lets
+    * the q212/q216 gate twins share ONE memoized signature pass where
+    * independent-build semantics are not the thing under test (round-9
+    * VERDICT item 4). */
   private[analytics] def buildFromSigs(sigs: DataFrame, name: String,
-      buckets: Int, parts: Int = -1, estThreshold: Double = 0.5): Unit = {
+      buckets: Int, parts: Int, estThreshold: Double = 0.5): Unit = {
     import graft.functions.PhaseTimer.timed
     val spark = sigs.sparkSession
-    // ONE count of the materialized frame feeds both derived widths
-    // (buckets ≤ 0 auto-sizes like the parts grid — [[Bucketed
-    // .derivedBuckets]]; a fixed 32 is wrong at both scale extremes)
-    val nSigs = if (parts > 0 && buckets > 0) 0L else sigs.count()
-    val p = if (parts > 0) parts else derivedParts(spark, nSigs * Dedup.NumBands)
-    val b = if (buckets > 0) buckets else Bucketed.derivedBuckets(spark, nSigs)
     // disjoint tables, both reading the materialized signature frame —
     // fan the two writes on driver threads (guide §2.6)
     graft.functions.Par.inParallel(Seq(
       () => timed("clubld.sigs.write")(
-        Bucketed.writeBucketed(sigs, s"${name}_sigs", "doc_id", b)),
+        Bucketed.writeBucketed(sigs, s"${name}_sigs", "doc_id", buckets)),
       () => timed("clubld.bands.write")(
-        Bucketed.writePartitioned(withPb(Dedup.bandsOf(sigs), p),
-          s"${name}_bands", "pb", p))))
+        Bucketed.writePartitioned(withPb(Dedup.bandsOf(sigs), parts),
+          s"${name}_bands", "pb", parts))))
     TableProps.set(spark, s"${name}_bands", EstProp -> estThreshold.toString)
     Tombstones.clear(spark, name) // a rebuild has nothing to forget
   }
@@ -494,13 +500,11 @@ object DedupIndex {
       estThreshold: Double = 0.5): Unit = {
     import graft.functions.PhaseTimer.timed
     val spark = raw.sparkSession
-    val sigs = timed("clubld.sigs")(Materialize(raw.select(col("doc_id"),
+    val (sigs, n) = timed("clubld.sigs")(Materialize.counted(raw.select(col("doc_id"),
       Dedup.minhashSignature(col("w")).as("mhs"))))
     // ONE count derives the grid AND the bucket width so all four tables
     // of both families share one modulus / one width
-    val n = if (parts > 0 && buckets > 0) 0L else sigs.count()
-    val p = if (parts > 0) parts else derivedParts(spark, n * Dedup.NumBands)
-    val b = if (buckets > 0) buckets else Bucketed.derivedBuckets(spark, n)
+    val (b, p) = widths(spark, n, buckets, parts)
     graft.functions.Par.inParallel(Seq(
       () => buildFromSigs(sigs, name, b, p, estThreshold),
       () => buildClusterTables(raw, name, b, threshold, p)))

@@ -75,13 +75,6 @@ object IndexAudit {
       () => { postingsMemo(spark, dir); dlMemo(spark, dir) },
       () => cellsMemo(spark, dir)))
 
-  /** Eagerly build the shared gate inputs — Bench calls this inside
-    * q00_shared_build so the shared cost stays visible in the total. */
-  def warmGateInputs(spark: SparkSession, dir: String): Unit = {
-    warmSharedInputs(spark, dir)
-    pristineTrio(spark, dir)
-  }
-
   /** The q212 pristine build alone — for callers that warmed the inputs
     * themselves (Bench's fanned q00). */
   def warmPristineTrio(spark: SparkSession, dir: String): Unit =

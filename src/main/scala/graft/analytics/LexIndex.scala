@@ -60,12 +60,12 @@ object LexIndex {
     * at both scale extremes, and every surplus bucket costs each stream
     * batch a task and a file). Extends and probes read the width from the
     * catalog either way; [[compact]] re-derives each table's width from
-    * its live rows and only ever widens it. */
+    * its live rows and only ever widens it. The postings count is
+    * observed by the job that materializes them ([[Materialize.counted]]),
+    * not by a job of its own. */
   def build(docs: DataFrame, name: String, buckets: Int = -1): Unit = {
-    val postings = Materialize(postingsOf(docs))
-    val b =
-      if (buckets > 0) buckets
-      else Bucketed.derivedBuckets(docs.sparkSession, postings.count())
+    val (postings, n) = Materialize.counted(postingsOf(docs))
+    val b = if (buckets > 0) buckets else Bucketed.derivedBuckets(docs.sparkSession, n)
     buildFrom(postings, Materialize(dlFromPostings(postings)), name, b)
   }
 

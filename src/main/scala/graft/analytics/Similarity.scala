@@ -44,7 +44,7 @@ object Similarity {
 
   /** Multi-table sign-LSH: `Sketches.LshTables` independent tables of
     * `LshPlanesPerTable` sign bits each (hyperplanes owned by the codegen'd
-    * SignBuckets kernel). Multi-table OR-construction — a pair is a
+    * `sign_buckets` kernel). Multi-table OR-construction — a pair is a
     * candidate if it collides in ANY table — is what controls recall: for
     * cosine ≥ 0.9 (θ ≈ 26°) a pair matches one 8-bit table w.p.
     * (1−θ/π)^8 ≈ 0.29, so 8 tables miss with prob ≈ 6%. On isotropic data
@@ -268,14 +268,6 @@ object Similarity {
         round(col("sim"), 4).as("cos_sim"), col("rn"))
   }
 
-  /** q74 entry: PQ ANN for the q28 query set (rows-only; q75 is the oracle). */
-  def pqTopK(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val e = embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    pqTopKOn(e,
-      e.filter(col("vec_id") < 10).select(col("vec_id").as("query_id"), col("v").as("qv")), k)
-  }
-
   /** q85: int8 scalar-quantization (SQ) ANN — the TRAINING-FREE quantization
     * tier next to PQ: no codebook, no sample pass — each corpus vector
     * carries its own max-abs scale + 8-bit codes (4× smaller than float32
@@ -314,14 +306,6 @@ object Similarity {
       .filter(col("rn") <= k)
       .select(col("query_id"), col("neighbor_id"),
         round(col("sim"), 4).as("cos_sim"), col("rn"))
-  }
-
-  /** q85 entry: SQ ANN for the q28 query set (rows-only; q86 is the oracle). */
-  def sqTopK(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
-    val e = embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    sqTopKOn(e,
-      e.filter(col("vec_id") < 10).select(col("vec_id").as("query_id"), col("v").as("qv")), k)
   }
 
   /** Deterministic ±1 random projection (Achlioptas' JL construction with

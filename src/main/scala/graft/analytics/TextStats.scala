@@ -31,9 +31,6 @@ object TextStats {
     * first token. */
   def tokens(c: Column): Column = regexp_extract_all(c, lit("\\S+"), lit(0))
 
-  /** Distinct whitespace word tokens. */
-  def wordTokens(c: Column): Column = array_distinct(tokens(c))
-
   /** Distinct word n-gram shingles (default trigram) — the standard document
     * shingling for near-dup detection: far more discriminative than char
     * n-grams on natural text, and the shingle space is diverse enough that

@@ -142,9 +142,4 @@ object VnText {
   /** F10: parking flag "Có" → true (element-exists semantics,
     * alonhadat.py:172-176); null stays null. */
   def parking(c: Column): Column = when(c.isNotNull, trim(c) === "Có")
-
-  /** F14: the producer's key coalesce chain
-    * (reference: kafka_cc/producer/kafka_producer.py:59-61). */
-  def listingKey(link: Column, title: Column, fallback: Column): Column =
-    coalesce(link, title, fallback)
 }

@@ -1,47 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graft.ColumnBridge.{toColumn, toExpression}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 
-/** Hamming distance between two 64-bit fingerprints (SimHash comparison) as a
-  * native codegen'd Catalyst expression: `bitCount(a ^ b)` compiles to two JVM
-  * intrinsics inside whole-stage codegen — no UDF boxing, null-safe.
-  *
-  * This is the preferred extension style for scalar ops Spark lacks
-  * (custom `Expression` with `doGenCode`, per the build brief) — though note
-  * Spark can also express this one as `bit_count(a ^ b)` built-ins; we keep
-  * the fused expression as the codegen exemplar and to make SimHash plans
-  * read as what they are.
+/** Bit-level kernels. `hamming_distance` compares two 64-bit SimHash
+  * fingerprints: `bitCount(a ^ b)`, which the JIT compiles to two
+  * intrinsics. Spark can express it as `bit_count(a ^ b)` from built-ins;
+  * the named kernel keeps SimHash plans reading as what they are.
   */
-case class HammingDistance(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (left.dataType == LongType && right.dataType == LongType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"hamming_distance expects (bigint, bigint), got (${left.dataType}, ${right.dataType})")
-
-  override def dataType: DataType = IntegerType
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    java.lang.Long.bitCount(a.asInstanceOf[Long] ^ b.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = java.lang.Long.bitCount($a ^ $b);")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "hamming_distance"
-}
-
 object BitOps {
-  /** Column-API surface for [[HammingDistance]]. */
-  def hammingDistance(a: Column, b: Column): Column =
-    toColumn(HammingDistance(toExpression(a), toExpression(b)))
+  def hammingKernel(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
+
+  def hammingDistance(a: Column, b: Column): Column = Kernels.HammingDistance(a, b)
 }

@@ -3,11 +3,6 @@ package graft.functions
 import java.util.zip.Deflater
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graft.ColumnBridge.{toColumn, toExpression}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Compression-ratio text-quality signal: deflate(text).length /
@@ -40,22 +35,5 @@ object Compress {
     compressed.toDouble / raw.length.toDouble
   }
 
-  case class DeflateRatio(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = DoubleType
-    override def checkInputDataTypes(): TypeCheckResult =
-      child.dataType match {
-        case StringType => TypeCheckResult.TypeCheckSuccess
-        case t => TypeCheckResult.TypeCheckFailure(
-          s"deflate_ratio expects string, got $t")
-      }
-    override protected def nullSafeEval(v: Any): Any =
-      deflateRatioKernel(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.Compress$$.MODULE$$.deflateRatioKernel($c);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "deflate_ratio"
-  }
-
-  def deflateRatio(c: Column): Column = toColumn(DeflateRatio(toExpression(c)))
+  def deflateRatio(c: Column): Column = Kernels.DeflateRatio(c)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Registers the engine's custom Catalyst expressions as SQL functions, so
+/** Registers the engine's kernels and aggregates as SQL functions, so
   * `spark.sql("SELECT minhash_signature(word_shingles(text)) ...")` works —
   * the full API surface is available from both the Column API and SQL.
   *
@@ -23,40 +23,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  import Sketches._
 
-  private def one(f: Expression => Expression): Seq[Expression] => Expression =
-    exprs => f(exprs.head)
-  private def two(f: (Expression, Expression) => Expression): Seq[Expression] => Expression =
-    exprs => f(exprs.head, exprs(1))
-  private def three(f: (Expression, Expression, Expression) => Expression): Seq[Expression] => Expression =
-    exprs => f(exprs.head, exprs(1), exprs(2))
-
-  val registrations: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "word_shingles"     -> one(WordShingles(_)),
-    "word_ngrams_all"   -> one(WordNgramsAll(_)),
-    "sort_by_hash"      -> one(SortByHash(_)),
-    "sign_buckets"      -> one(SignBuckets(_)),
-    "minhash_signature" -> one(MinHashSignature(_)),
-    "simhash64"         -> one(SimHash64(_)),
-    "simhash128"        -> one(SimHash128(_)),
-    "jaccard_sim"       -> two(JaccardSim(_, _)),
-    "signature_agreement" -> two(SignatureAgreement(_, _)),
-    "cosine_sim"        -> two(CosineSim(_, _)),
-    "dot_product"       -> two(DotProduct(_, _)),
-    "hamming_distance"  -> two(HammingDistance(_, _)),
-    "nearest_centroid"  -> three(NearestCentroid(_, _, _)),
-    "pq_encode"         -> two(PqEncode(_, _)),
-    "pq_adc_sim"        -> three(PqAdcSim(_, _, _)),
-    "sq_scale"          -> one(SqScale(_)),
-    "sq_encode"         -> one(SqEncode(_)),
-    "sq_adc_sim"        -> three(SqAdcSim(_, _, _)),
-    "nfc_normalize"     -> one(UnicodeNorm.NfcNormalize(_)),
-    "deflate_ratio"     -> one(Compress.DeflateRatio(_)),
-    "kmv_estimate"      -> one(KmvSketch.KmvEstimate(_)),
-    "kmv_union"         -> two(KmvSketch.KmvUnion(_, _)),
-    "kmv_intersect_estimate" -> two(KmvSketch.KmvIntersectEstimate(_, _)),
-    "kmv_jaccard"       -> two(KmvSketch.KmvJaccard(_, _)),
+  /** Every [[Kernels]] entry under its SQL name, plus the aggregates. */
+  val registrations: Seq[(String, Seq[Expression] => Expression)] =
+    Kernels.all.map(k => k.name -> (k.expr _)) ++ Seq(
     // kmv aggregates: k must be a foldable int literal
     "kmv_sketch" -> (exprs => {
       require(exprs.length <= 2, "kmv_sketch(hash_long[, k])")
@@ -66,7 +36,7 @@ object GraftExtensions {
       } else 1024
       KmvSketch.KmvSketchAgg(exprs.head, k)
     }),
-    "kmv_merge" -> one(KmvSketch.KmvMergeAgg(_)),
+    "kmv_merge" -> (exprs => KmvSketch.KmvMergeAgg(exprs.head)),
     // custom aggregate: the registry builder returns the AggregateFunction
     // itself; the analyzer wraps it. Percentiles must be a foldable literal
     // (scalar or array) — evaluated once at plan time.

@@ -6,9 +6,8 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.graft.ColumnBridge.{toColumn, toExpression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 
@@ -275,72 +274,36 @@ object KmvSketch {
   }
 
   // ---- post-aggregate scalar combinators -------------------------------
-  // These run on GROUPED OUTPUT rows (one per group), never on raw data, so
-  // an interpreted eval is off the hot path by construction — the per-row
-  // work at scale is xxhash64 (codegen'd) + the aggregate above.
+  // These run on GROUPED OUTPUT rows (one per group), never on raw data —
+  // the per-row work at scale is xxhash64 (codegen'd) + the aggregate
+  // above. Bound as `kmv_estimate`, `kmv_union`, `kmv_intersect_estimate`
+  // and `kmv_jaccard` by [[Kernels]].
 
-  /** `kmv_estimate(sketch)` → double distinct-count estimate. */
-  case class KmvEstimate(child: Expression)
-    extends UnaryExpression with CodegenFallback {
-    override def dataType: DataType = DoubleType
-    override def nullable: Boolean = child.nullable
-    override protected def nullSafeEval(v: Any): Any =
-      Kmv.fromBytes(v.asInstanceOf[Array[Byte]]).estimate
-    override protected def withNewChildInternal(newChild: Expression): KmvEstimate =
-      copy(child = newChild)
-    override def prettyName: String = "kmv_estimate"
+  /** Distinct-count estimate of one serialized sketch. */
+  def estimateKernel(s: Array[Byte]): Double = Kmv.fromBytes(s).estimate
+
+  /** Serialized sketch of the union of two. */
+  def unionKernel(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+    val sa = Kmv.fromBytes(a)
+    sa.mergeWith(Kmv.fromBytes(b))
+    sa.toBytes
   }
 
-  /** `kmv_union(a, b)` → binary sketch of the union. */
-  case class KmvUnion(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-    override def dataType: DataType = BinaryType
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val sa = Kmv.fromBytes(a.asInstanceOf[Array[Byte]])
-      sa.mergeWith(Kmv.fromBytes(b.asInstanceOf[Array[Byte]]))
-      sa.toBytes
-    }
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): KmvUnion =
-      copy(left = l, right = r)
-    override def prettyName: String = "kmv_union"
-  }
+  /** Estimate of |A ∩ B|. */
+  def intersectEstimateKernel(a: Array[Byte], b: Array[Byte]): Double =
+    Kmv.setEstimates(Kmv.fromBytes(a), Kmv.fromBytes(b))._2
 
-  /** `kmv_intersect_estimate(a, b)` → double estimate of |A ∩ B|. */
-  case class KmvIntersectEstimate(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-    override def dataType: DataType = DoubleType
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      Kmv.setEstimates(
-        Kmv.fromBytes(a.asInstanceOf[Array[Byte]]),
-        Kmv.fromBytes(b.asInstanceOf[Array[Byte]]))._2
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): KmvIntersectEstimate =
-      copy(left = l, right = r)
-    override def prettyName: String = "kmv_intersect_estimate"
-  }
-
-  /** `kmv_jaccard(a, b)` → double estimate of J(A, B). */
-  case class KmvJaccard(left: Expression, right: Expression)
-    extends BinaryExpression with CodegenFallback {
-    override def dataType: DataType = DoubleType
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      Kmv.setEstimates(
-        Kmv.fromBytes(a.asInstanceOf[Array[Byte]]),
-        Kmv.fromBytes(b.asInstanceOf[Array[Byte]]))._3
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): KmvJaccard =
-      copy(left = l, right = r)
-    override def prettyName: String = "kmv_jaccard"
-  }
+  /** Estimate of J(A, B). */
+  def jaccardEstimateKernel(a: Array[Byte], b: Array[Byte]): Double =
+    Kmv.setEstimates(Kmv.fromBytes(a), Kmv.fromBytes(b))._3
 
   // ---- Column API -------------------------------------------------------
   def kmvSketch(hash: Column, k: Int = 1024): Column =
     toColumn(KmvSketchAgg(toExpression(hash), k).toAggregateExpression())
   def kmvMerge(sketch: Column): Column =
     toColumn(KmvMergeAgg(toExpression(sketch)).toAggregateExpression())
-  def kmvEstimate(sketch: Column): Column = toColumn(KmvEstimate(toExpression(sketch)))
-  def kmvUnion(a: Column, b: Column): Column =
-    toColumn(KmvUnion(toExpression(a), toExpression(b)))
-  def kmvIntersectEstimate(a: Column, b: Column): Column =
-    toColumn(KmvIntersectEstimate(toExpression(a), toExpression(b)))
-  def kmvJaccard(a: Column, b: Column): Column =
-    toColumn(KmvJaccard(toExpression(a), toExpression(b)))
+  def kmvEstimate(sketch: Column): Column = Kernels.KmvEstimate(sketch)
+  def kmvUnion(a: Column, b: Column): Column = Kernels.KmvUnion(a, b)
+  def kmvIntersectEstimate(a: Column, b: Column): Column = Kernels.KmvIntersectEstimate(a, b)
+  def kmvJaccard(a: Column, b: Column): Column = Kernels.KmvJaccard(a, b)
 }

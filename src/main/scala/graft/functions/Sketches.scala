@@ -1,27 +1,25 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graft.ColumnBridge.{toColumn, toExpression}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Sketch signatures as native codegen'd Catalyst expressions.
+/** Sketch, similarity and quantization kernels over Catalyst's internal
+  * values, each bound into plans by [[Kernels]] as one named expression.
   *
   * Spark's higher-order functions (`transform`/`aggregate`) are
   * CodegenFallback — they interpret the lambda expression tree per element.
   * A 64-permutation MinHash over a few hundred shingles costs ~25k
-  * interpreted evals per row that way; these expressions instead hash each
+  * interpreted evals per row that way; these kernels instead hash each
   * element once (XXH64 over the raw UTF8 bytes) and derive all permutations
-  * with a splitmix64 finalizer — a tight compiled loop in both interpreted
-  * and whole-stage-codegen paths (the generated code calls the same static
-  * kernel, so there is exactly one implementation of the math).
+  * with a splitmix64 finalizer — a tight compiled loop that generated code
+  * and interpreted evaluation both call, so there is exactly one
+  * implementation of the math.
   */
 object Sketches {
 
-  private final val NumPermsDefault = 64
+  private[functions] final val NumPermsDefault = 64
 
   /** Deterministic per-permutation salts (fixed seed — signatures must be
     * identical across runs, executors, and cluster layouts). */
@@ -116,26 +114,7 @@ object Sketches {
     new GenericArrayData(Array(w0, w1))
   }
 
-  case class SimHash128(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(StringType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case t =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"simhash128 expects array<string>, got $t")
-      }
-    override protected def nullSafeEval(v: Any): Any =
-      simhash128Kernel(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.simhash128Kernel($c);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "simhash128"
-  }
-
-  def simhash128(c: Column): Column = toColumn(SimHash128(toExpression(c)))
+  def simhash128(c: Column): Column = Kernels.SimHash128(c)
 
   /** The regex-`\s` character class ([ \t\n\x0B\f\r]) — identical in Java
     * regex and RE2 (DuckDB), which is exactly why it is THE token boundary
@@ -208,27 +187,7 @@ object Sketches {
     new GenericArrayData(out)
   }
 
-  case class WordShingles(child: Expression, n: Int = 3) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case StringType =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case t =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"word_shingles expects string, got $t")
-      }
-    override protected def nullSafeEval(v: Any): Any =
-      wordShinglesKernel(v.asInstanceOf[UTF8String], n)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.wordShinglesKernel($c, $n);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "word_shingles"
-  }
-
-  def wordShingles(c: Column, n: Int = 3): Column =
-    toColumn(WordShingles(toExpression(c), n))
+  def wordShingles(c: Column, n: Int = 3): Column = Kernels.WordShingles.withParams(n)(c)
 
   /** Non-distinct variant of [[wordShinglesKernel]]: every n-gram occurrence
     * in order (duplicates kept) — what language-model counting needs, where
@@ -256,27 +215,7 @@ object Sketches {
     new GenericArrayData(out)
   }
 
-  case class WordNgramsAll(child: Expression, n: Int = 2) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case StringType =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case t =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"word_ngrams_all expects string, got $t")
-      }
-    override protected def nullSafeEval(v: Any): Any =
-      wordNgramsAllKernel(v.asInstanceOf[UTF8String], n)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.wordNgramsAllKernel($c, $n);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "word_ngrams_all"
-  }
-
-  def wordNgramsAll(c: Column, n: Int = 2): Column =
-    toColumn(WordNgramsAll(toExpression(c), n))
+  def wordNgramsAll(c: Column, n: Int = 2): Column = Kernels.WordNgramsAll.withParams(n)(c)
 
   private val md5Local =
     new ThreadLocal[java.security.MessageDigest] {
@@ -332,29 +271,7 @@ object Sketches {
       Array[Any](UTF8String.fromString(hex.toString), seen.size.toLong))
   }
 
-  case class MinShingleMd5(child: Expression, n: Int) extends UnaryExpression {
-    override def dataType: DataType = StructType(Seq(
-      StructField("fp_min_shingle", StringType, nullable = false),
-      StructField("n_shingles", LongType, nullable = false)))
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case StringType =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case t =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"min_shingle_md5 expects string, got $t")
-      }
-    override protected def nullSafeEval(v: Any): Any =
-      minShingleMd5Kernel(v.asInstanceOf[UTF8String], n)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.minShingleMd5Kernel($c, $n);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "min_shingle_md5"
-  }
-
-  def minShingleMd5(c: Column, n: Int = 5): Column =
-    toColumn(MinShingleMd5(toExpression(c), n))
+  def minShingleMd5(c: Column, n: Int = 5): Column = Kernels.MinShingleMd5.withParams(n)(c)
 
   /** Content-defined chunk kernel for exact span-level dedup. A token is a
     * CUT POINT when the high nibble of md5(token) is 0 (p = 1/16 → expected
@@ -404,26 +321,7 @@ object Sketches {
     new GenericArrayData(out)
   }
 
-  case class WordCdcChunks(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case StringType =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case t =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"word_cdc_chunks expects string, got $t")
-      }
-    override protected def nullSafeEval(v: Any): Any =
-      wordCdcChunksKernel(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.wordCdcChunksKernel($c);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "word_cdc_chunks"
-  }
-
-  def wordCdcChunks(c: Column): Column = toColumn(WordCdcChunks(toExpression(c)))
+  def wordCdcChunks(c: Column): Column = Kernels.WordCdcChunks(c)
 
   /** Sort a string array by the fixed hash order (XXH64 of the element, then
     * the element itself as tiebreaker — a total order). One hash per element
@@ -463,26 +361,7 @@ object Sketches {
     new GenericArrayData(out)
   }
 
-  case class SortByHash(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(StringType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case t =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"sort_by_hash expects array<string>, got $t")
-      }
-    override protected def nullSafeEval(v: Any): Any =
-      sortByHashKernel(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.sortByHashKernel($c);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "sort_by_hash"
-  }
-
-  def sortByHash(c: Column): Column = toColumn(SortByHash(toExpression(c)))
+  def sortByHash(c: Column): Column = Kernels.SortByHash(c)
 
   /** Exact Jaccard of two DISTINCT string arrays: |∩| / (|A|+|B|−|∩|) in one
     * hash-set pass. Equivalent to
@@ -505,29 +384,7 @@ object Sketches {
     inter.toDouble / (na + nb - inter).toDouble
   }
 
-  case class JaccardSim(left: Expression, right: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case (l, r) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"jaccard_sim expects (array<string>, array<string>), got ($l, $r)")
-      }
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      jaccardKernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.jaccardKernel($a, $b);")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-    override def prettyName: String = "jaccard_sim"
-  }
-
-  def jaccardSim(a: Column, b: Column): Column =
-    toColumn(JaccardSim(toExpression(a), toExpression(b)))
+  def jaccardSim(a: Column, b: Column): Column = Kernels.JaccardSim(a, b)
 
   /** Cosine similarity kernel over double arrays. Summation is left-to-right
     * (same order as `aggregate(zip_with(a,b,_*_), 0.0, _+_)` and DuckDB's
@@ -552,29 +409,7 @@ object Sketches {
     if (denom == 0.0) Double.NaN else dot / denom
   }
 
-  case class CosineSim(left: Expression, right: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case (l, r) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"cosine_sim expects (array<double>, array<double>), got ($l, $r)")
-      }
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      cosineKernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.cosineKernel($a, $b);")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-    override def prettyName: String = "cosine_sim"
-  }
-
-  def cosineSim(a: Column, b: Column): Column =
-    toColumn(CosineSim(toExpression(a), toExpression(b)))
+  def cosineSim(a: Column, b: Column): Column = Kernels.CosineSim(a, b)
 
   /** Left-to-right dot product kernel (same order as aggregate(zip_with)). */
   def dotKernel(a: ArrayData, b: ArrayData): Double = {
@@ -585,29 +420,7 @@ object Sketches {
     dot
   }
 
-  case class DotProduct(left: Expression, right: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-    override def dataType: DataType = DoubleType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case (l, r) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"dot_product expects (array<double>, array<double>), got ($l, $r)")
-      }
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      dotKernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.dotKernel($a, $b);")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-    override def prettyName: String = "dot_product"
-  }
-
-  def dotProduct(a: Column, b: Column): Column =
-    toColumn(DotProduct(toExpression(a), toExpression(b)))
+  def dotProduct(a: Column, b: Column): Column = Kernels.DotProduct(a, b)
 
   // ---- multi-table sign-LSH buckets -----------------------------------
 
@@ -646,70 +459,12 @@ object Sketches {
     new GenericArrayData(out)
   }
 
-  case class SignBuckets(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(DoubleType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case t =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"sign_buckets expects array<double>, got $t")
-      }
-    override protected def nullSafeEval(v: Any): Any =
-      signBucketsKernel(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.signBucketsKernel($c);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "sign_buckets"
-  }
-
-  def signBuckets(c: Column): Column = toColumn(SignBuckets(toExpression(c)))
-
-  case class MinHashSignature(child: Expression, numPerms: Int = NumPermsDefault)
-      extends UnaryExpression {
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(StringType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case t =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"minhash_signature expects array<string>, got $t")
-      }
-    override protected def nullSafeEval(v: Any): Any =
-      minhashKernel(v.asInstanceOf[ArrayData], numPerms)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.minhashKernel($c, $numPerms);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "minhash_signature"
-  }
-
-  case class SimHash64(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(StringType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case t =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"simhash64 expects array<string>, got $t")
-      }
-    override protected def nullSafeEval(v: Any): Any =
-      simhashKernel(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.simhashKernel($c);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "simhash64"
-  }
+  def signBuckets(c: Column): Column = Kernels.SignBuckets(c)
 
   def minhashSignature(c: Column, numPerms: Int = NumPermsDefault): Column =
-    toColumn(MinHashSignature(toExpression(c), numPerms))
+    Kernels.MinHashSignature.withParams(numPerms)(c)
 
-  def simhash64(c: Column): Column = toColumn(SimHash64(toExpression(c)))
+  def simhash64(c: Column): Column = Kernels.SimHash64(c)
 
   /** Count of agreeing slots between two long-array signatures, over the
     * common prefix (positions past the shorter array never match — identical
@@ -729,29 +484,7 @@ object Sketches {
     m
   }
 
-  case class SignatureAgreement(left: Expression, right: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-    override def dataType: DataType = IntegerType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case (l, r) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"signature_agreement expects (array<bigint>, array<bigint>), got ($l, $r)")
-      }
-    override protected def nullSafeEval(a: Any, b: Any): Any =
-      sigAgreementKernel(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.sigAgreementKernel($a, $b);")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-    override def prettyName: String = "signature_agreement"
-  }
-
-  def signatureAgreement(a: Column, b: Column): Column =
-    toColumn(SignatureAgreement(toExpression(a), toExpression(b)))
+  def signatureAgreement(a: Column, b: Column): Column = Kernels.SignatureAgreement(a, b)
 
   /** Nearest-centroid kernel: argmax-cosine cell id for one vector against
     * the packed centroid arrays (parallel cids/cvs). Same comparison
@@ -782,31 +515,8 @@ object Sketches {
     bestCid
   }
 
-  case class NearestCentroid(first: Expression, second: Expression, third: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-    override def dataType: DataType = LongType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      (first.dataType, second.dataType, third.dataType) match {
-        case (ArrayType(DoubleType, _), ArrayType(ArrayType(DoubleType, _), _), ArrayType(LongType, _)) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case (a, b, c) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"nearest_centroid expects (array<double>, array<array<double>>, array<bigint>), got ($a, $b, $c)")
-      }
-    override protected def nullSafeEval(v: Any, cvs: Any, cids: Any): Any =
-      nearestCentroidKernel(v.asInstanceOf[ArrayData],
-        cvs.asInstanceOf[ArrayData], cids.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (v, cvs, cids) =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.nearestCentroidKernel($v, $cvs, $cids);")
-    override protected def withNewChildrenInternal(
-        f: Expression, s: Expression, t: Expression): Expression =
-      copy(first = f, second = s, third = t)
-    override def prettyName: String = "nearest_centroid"
-  }
-
   def nearestCentroid(v: Column, cvs: Column, cids: Column): Column =
-    toColumn(NearestCentroid(toExpression(v), toExpression(cvs), toExpression(cids)))
+    Kernels.NearestCentroid(v, cvs, cids)
 
   /** Product-quantization encode kernel: split the vector into m equal
     * subspaces (m = |v| / |codeword|) and emit, per subspace, the index of
@@ -883,54 +593,8 @@ object Sketches {
     dot
   }
 
-  case class PqEncode(left: Expression, right: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(DoubleType, _), ArrayType(ArrayType(DoubleType, _), _)) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case (l, r) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"pq_encode expects (array<double>, array<array<double>>), got ($l, $r)")
-      }
-    override protected def nullSafeEval(v: Any, cbs: Any): Any =
-      pqEncodeKernel(v.asInstanceOf[ArrayData], cbs.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (v, cbs) =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.pqEncodeKernel($v, $cbs);")
-    override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
-      copy(left = l, right = r)
-    override def prettyName: String = "pq_encode"
-  }
-
-  case class PqAdcSim(first: Expression, second: Expression, third: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-    override def dataType: DataType = DoubleType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      (first.dataType, second.dataType, third.dataType) match {
-        case (ArrayType(DoubleType, _), ArrayType(IntegerType, _), ArrayType(ArrayType(DoubleType, _), _)) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case (a, b, c) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"pq_adc_sim expects (array<double>, array<int>, array<array<double>>), got ($a, $b, $c)")
-      }
-    override protected def nullSafeEval(qv: Any, codes: Any, cbs: Any): Any =
-      pqAdcSimKernel(qv.asInstanceOf[ArrayData], codes.asInstanceOf[ArrayData],
-        cbs.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (qv, codes, cbs) =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.pqAdcSimKernel($qv, $codes, $cbs);")
-    override protected def withNewChildrenInternal(
-        f: Expression, s: Expression, t: Expression): Expression =
-      copy(first = f, second = s, third = t)
-    override def prettyName: String = "pq_adc_sim"
-  }
-
-  def pqEncode(v: Column, cbs: Column): Column =
-    toColumn(PqEncode(toExpression(v), toExpression(cbs)))
-  def pqAdcSim(qv: Column, codes: Column, cbs: Column): Column =
-    toColumn(PqAdcSim(toExpression(qv), toExpression(codes), toExpression(cbs)))
+  def pqEncode(v: Column, cbs: Column): Column = Kernels.PqEncode(v, cbs)
+  def pqAdcSim(qv: Column, codes: Column, cbs: Column): Column = Kernels.PqAdcSim(qv, codes, cbs)
 
   // -- int8 scalar quantization (SQ) ---------------------------------------
   // The training-free quantization tier: no codebook at all — each vector
@@ -981,69 +645,8 @@ object Sketches {
     dot * scale
   }
 
-  case class SqScale(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = DoubleType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(DoubleType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case t =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"sq_scale expects array<double>, got $t")
-      }
-    override protected def nullSafeEval(v: Any): Any =
-      sqScaleKernel(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.sqScaleKernel($v);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "sq_scale"
-  }
-
-  case class SqEncode(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case ArrayType(DoubleType, _) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case t =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"sq_encode expects array<double>, got $t")
-      }
-    override protected def nullSafeEval(v: Any): Any =
-      sqEncodeKernel(v.asInstanceOf[ArrayData])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, v =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.sqEncodeKernel($v);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "sq_encode"
-  }
-
-  case class SqAdcSim(first: Expression, second: Expression, third: Expression)
-      extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-    override def dataType: DataType = DoubleType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      (first.dataType, second.dataType, third.dataType) match {
-        case (ArrayType(DoubleType, _), ArrayType(IntegerType, _), DoubleType) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case (a, b, c) =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"sq_adc_sim expects (array<double>, array<int>, double), got ($a, $b, $c)")
-      }
-    override protected def nullSafeEval(qv: Any, codes: Any, scale: Any): Any =
-      sqAdcSimKernel(qv.asInstanceOf[ArrayData], codes.asInstanceOf[ArrayData],
-        scale.asInstanceOf[Double])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (qv, codes, scale) =>
-        s"${ev.value} = graft.functions.Sketches$$.MODULE$$.sqAdcSimKernel($qv, $codes, $scale);")
-    override protected def withNewChildrenInternal(
-        f: Expression, s: Expression, t: Expression): Expression =
-      copy(first = f, second = s, third = t)
-    override def prettyName: String = "sq_adc_sim"
-  }
-
-  def sqScale(v: Column): Column = toColumn(SqScale(toExpression(v)))
-  def sqEncode(v: Column): Column = toColumn(SqEncode(toExpression(v)))
+  def sqScale(v: Column): Column = Kernels.SqScale(v)
+  def sqEncode(v: Column): Column = Kernels.SqEncode(v)
   def sqAdcSim(qv: Column, codes: Column, scale: Column): Column =
-    toColumn(SqAdcSim(toExpression(qv), toExpression(codes), toExpression(scale)))
+    Kernels.SqAdcSim(qv, codes, scale)
 }

@@ -1,13 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graft.ColumnBridge.{toColumn, toExpression}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Unicode NFC normalization as a codegen'd expression.
+/** Unicode NFC normalization as a codegen'd kernel (`nfc_normalize`).
   *
   * The VnText parsers (graft.expr.VnText) match Vietnamese prefixes and unit
   * words ("Đường ", "tỷ", " lầu") byte-exactly — correct for NFC input, and
@@ -30,24 +26,5 @@ object UnicodeNorm {
       java.text.Normalizer.normalize(str, java.text.Normalizer.Form.NFC))
   }
 
-  case class NfcNormalize(child: Expression) extends UnaryExpression {
-    override def dataType: DataType = StringType
-    override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-      child.dataType match {
-        case StringType =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-        case t =>
-          org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-            s"nfc_normalize expects string, got $t")
-      }
-    override protected def nullSafeEval(v: Any): Any =
-      nfcKernel(v.asInstanceOf[UTF8String])
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c =>
-        s"${ev.value} = graft.functions.UnicodeNorm$$.MODULE$$.nfcKernel($c);")
-    override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    override def prettyName: String = "nfc_normalize"
-  }
-
-  def nfc(c: Column): Column = toColumn(NfcNormalize(toExpression(c)))
+  def nfc(c: Column): Column = Kernels.NfcNormalize(c)
 }

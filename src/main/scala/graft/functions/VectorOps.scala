@@ -18,7 +18,7 @@ object VectorOps {
     sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x * x))
 
   /** Cosine similarity; null on zero-norm input rather than dividing by 0.
-    * Backed by the codegen'd kernel (graft.functions.Sketches.CosineSim) —
+    * Backed by the codegen'd `cosine_sim` kernel (Sketches.cosineKernel) —
     * the `aggregate(zip_with(...))` formulation is CodegenFallback
     * (interpreted per element) and was the hot path of every similarity
     * join. Summation order is identical, so results are bit-equal. */
@@ -33,7 +33,4 @@ object VectorOps {
     val n = norm2(a)
     when(n > 0, transform(a, x => x / n))
   }
-
-  def euclidean(a: Column, b: Column): Column =
-    sqrt(aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x))
 }

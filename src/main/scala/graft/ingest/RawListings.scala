@@ -37,11 +37,6 @@ object RawListings {
         .option("columnNameOfCorruptRecord", CorruptCol)
         .json(path)
 
-  /** Diagnostics-only inferred read (SURVEY.md §1.3): used to detect schema
-    * drift in landed data, never on the hot path. */
-  def readJsonlInferred(spark: SparkSession, path: String): DataFrame =
-    spark.read.json(path)
-
   /** S1 + normalization: raw zone → typed listing table in one pass. */
   def typedListings(spark: SparkSession, path: String): DataFrame =
     Normalize.fromWire(readJsonl(spark, path))

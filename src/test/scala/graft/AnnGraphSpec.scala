@@ -67,11 +67,17 @@ class AnnGraphSpec extends SparkSpec {
       s"plants lost: ${out.sortBy(_._1).mkString(", ")}")
   }
 
+  /** Spark jobs of a default-width build over the spec vectors: the
+    * vector count that sizes the width rides the job materializing cells. */
+  private val BuildJobs = 34
+
   test("persisted index serves exactly what the in-memory path serves") {
     val name = "spec_graph_idx"
     val q = vecs.filter(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
-    AnnGraphIndex.build(vecs, name)
+    val buildJobs = JobCount.of(spark)(AnnGraphIndex.build(vecs, name))
+    info(s"jobs per default build: $buildJobs")
+    assert(buildJobs == BuildJobs, s"the build ran $buildJobs jobs (pinned $BuildJobs)")
     // explicit knobs: this pins ALGORITHM equivalence against the
     // in-memory path's fixed defaults — the persisted serve's own
     // defaults are density-adaptive and may resolve wider

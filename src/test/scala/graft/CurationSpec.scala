@@ -89,11 +89,10 @@ class CurationSpec extends SparkSpec {
     assert(r(2L) > 0.2, s"high-entropy text must resist: ${r(2L)}")
     assert(r(1L) < r(2L) / 4, "signal must be discriminative")
     assert(r(3L) == 1.0, "empty text is defined as 1.0")
-    // interpreted eval (Literal path, no codegen) matches the codegen'd
-    // dataframe path bit-for-bit on identical input
-    val interpreted = graft.functions.Compress.DeflateRatio(
-        org.apache.spark.sql.catalyst.expressions.Literal("spam " * 400))
-      .eval(null).asInstanceOf[Double]
+    // interpreted eval (a literal input is constant-folded at planning, no
+    // codegen) matches the codegen'd dataframe path bit-for-bit
+    val interpreted = spark.range(1).select(deflateRatio(lit("spam " * 400)))
+      .head().getDouble(0)
     assert(interpreted == r(1L), s"eval/codegen divergence: $interpreted vs ${r(1L)}")
     Seq("sf0.001", "sf0.01").foreach { s =>
       val bad = TextStats.compressibility(spark, sf(s))

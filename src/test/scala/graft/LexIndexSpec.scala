@@ -17,6 +17,10 @@ class LexIndexSpec extends SparkSpec {
     * and a compaction) on a one-bucket index. */
   private val LexBatchJobs = 20
 
+  /** Spark jobs of a default-width build of the `cb ≥ 50` slice: the
+    * postings count that sizes the width rides the materializing job. */
+  private val LexBuildJobs = 11
+
   private def nFiles(t: String): Int = {
     val loc = new org.apache.hadoop.fs.Path(spark.sessionState.catalog
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t)).location)
@@ -126,7 +130,10 @@ class LexIndexSpec extends SparkSpec {
     import spark.implicits._
     import graft.streaming.LexIndexStream
     val name = "spec_lex_jobs"
-    LexIndex.build(docs.filter(col("cb") >= 50).select("doc_id", "text"), name)
+    val buildJobs = JobCount.of(spark)(
+      LexIndex.build(docs.filter(col("cb") >= 50).select("doc_id", "text"), name))
+    info(s"jobs per default build: $buildJobs")
+    assert(buildJobs == LexBuildJobs, s"the build ran $buildJobs jobs (pinned $LexBuildJobs)")
     val fresh = docs.filter(col("cb") >= 20 && col("cb") < 50)
       .select("doc_id", "text").limit(10).collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq.toDF("doc_id", "text")
