@@ -37,23 +37,8 @@ object Accuracy {
     * the corpus (cos = 1, identical sign pattern ⇒ identical bucket in ALL
     * tables) — LSH MUST surface every plant at similarity 1.0. A broken
     * bucketing, hashing, or ranking stage makes this false. */
-  def lshPlantedRecall(spark: SparkSession, dir: String): DataFrame = {
-    val e = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val q = e.filter(col("vec_id") < 10)
-    // scaled (not identical) copies: same direction, different magnitude —
-    // proves the path is genuinely cosine, not an equality shortcut
-    val planted = q.select((col("vec_id") + 1000000L).as("vec_id"),
-      expr("transform(v, x -> x * 2.0d)").as("v"))
-    val topk = Similarity.lshTopKOn(
-      e.unionByName(planted),
-      q.select(col("vec_id").as("query_id"), col("v").as("qv")), k = 5)
-    topk.groupBy(col("query_id"))
-      .agg(max(when(col("neighbor_id") === col("query_id") + 1000000L &&
-        col("cos_sim") === 1.0, 1L).otherwise(0L)).as("found"))
-      .agg(count(lit(1)).as("n_queries"),
-        (sum(col("found")) === count(lit(1))).as("planted_ok"))
-  }
+  def lshPlantedRecall(spark: SparkSession, dir: String): DataFrame =
+    plantedRecall(spark, dir, (c, q) => Similarity.lshTopKOn(c, q, k = 5))
 
   /** q52: IVF planted-duplicate recall — same contract as q49 but for the
     * inverted-file path: a scaled copy of each query vector has identical
@@ -61,22 +46,9 @@ object Accuracy {
     * which the query always probes (nprobe ≥ 1) — IVF MUST return every
     * plant at similarity 1.0. Pins quantizer assignment, cell join, and
     * re-rank in one deterministic boolean. */
-  def ivfPlantedRecall(spark: SparkSession, dir: String): DataFrame = {
-    val e = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val q = e.filter(col("vec_id") < 10)
-    val planted = q.select((col("vec_id") + 1000000L).as("vec_id"),
-      expr("transform(v, x -> x * 2.0d)").as("v"))
-    val topk = Similarity.ivfTopKOn(
-      e.unionByName(planted),
-      q.select(col("vec_id").as("query_id"), col("v").as("qv")),
-      k = 5, numCentroids = 16, nprobe = 4)
-    topk.groupBy(col("query_id"))
-      .agg(max(when(col("neighbor_id") === col("query_id") + 1000000L &&
-        col("cos_sim") === 1.0, 1L).otherwise(0L)).as("found"))
-      .agg(count(lit(1)).as("n_queries"),
-        (sum(col("found")) === count(lit(1))).as("planted_ok"))
-  }
+  def ivfPlantedRecall(spark: SparkSession, dir: String): DataFrame =
+    plantedRecall(spark, dir, (c, q) =>
+      Similarity.ivfTopKOn(c, q, k = 5, numCentroids = 16, nprobe = 4))
 
   /** q64: 128-bit SimHash planted-exact-copy recall. Identical texts have
     * identical fingerprints (distance 0, same value in EVERY chunk), so the
@@ -106,21 +78,8 @@ object Accuracy {
     * the boolean is oracle-checkable; a broken kernel, codebook layout, or
     * re-rank drops it to false. Scaled (not identical) copies prove the
     * path is genuinely geometric, not an equality shortcut. */
-  def pqPlantedRecall(spark: SparkSession, dir: String): DataFrame = {
-    val e = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val q = e.filter(col("vec_id") < 10)
-    val planted = q.select((col("vec_id") + 1000000L).as("vec_id"),
-      expr("transform(v, x -> x * 2.0d)").as("v"))
-    val topk = Similarity.pqTopKOn(
-      e.unionByName(planted),
-      q.select(col("vec_id").as("query_id"), col("v").as("qv")), k = 5)
-    topk.groupBy(col("query_id"))
-      .agg(max(when(col("neighbor_id") === col("query_id") + 1000000L &&
-        col("cos_sim") === 1.0, 1L).otherwise(0L)).as("found"))
-      .agg(count(lit(1)).as("n_queries"),
-        (sum(col("found")) === count(lit(1))).as("planted_ok"))
-  }
+  def pqPlantedRecall(spark: SparkSession, dir: String): DataFrame =
+    plantedRecall(spark, dir, (c, q) => Similarity.pqTopKOn(c, q, k = 5))
 
   /** q86: SQ planted-copy recall — a scaled copy of each query vector
     * normalizes to the identical unit vector, hence identical int8 scale +
@@ -128,42 +87,16 @@ object Accuracy {
     * over-fetch cut, and exact re-rank pins it at cos 1.0. Deterministic
     * end-to-end (per-vector scale, half-up rounding, fixed tie-breaks) so
     * the boolean is oracle-checkable. */
-  def sqPlantedRecall(spark: SparkSession, dir: String): DataFrame = {
-    val e = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val q = e.filter(col("vec_id") < 10)
-    val planted = q.select((col("vec_id") + 1000000L).as("vec_id"),
-      expr("transform(v, x -> x * 2.0d)").as("v"))
-    val topk = Similarity.sqTopKOn(
-      e.unionByName(planted),
-      q.select(col("vec_id").as("query_id"), col("v").as("qv")), k = 5)
-    topk.groupBy(col("query_id"))
-      .agg(max(when(col("neighbor_id") === col("query_id") + 1000000L &&
-        col("cos_sim") === 1.0, 1L).otherwise(0L)).as("found"))
-      .agg(count(lit(1)).as("n_queries"),
-        (sum(col("found")) === count(lit(1))).as("planted_ok"))
-  }
+  def sqPlantedRecall(spark: SparkSession, dir: String): DataFrame =
+    plantedRecall(spark, dir, (c, q) => Similarity.sqTopKOn(c, q, k = 5))
 
   /** q88: IVF-PQ planted-copy recall — the composed path must preserve both
     * constituent contracts at once: the plant's unit vector lands in the
     * query's own top-1 cell (IVF leg, q52's argument) AND encodes to the
     * query's identical PQ codes (PQ leg, q75's argument), so it must
     * survive cell pruning, ADC over-fetch, and exact re-rank at cos 1.0. */
-  def ivfPqPlantedRecall(spark: SparkSession, dir: String): DataFrame = {
-    val e = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val q = e.filter(col("vec_id") < 10)
-    val planted = q.select((col("vec_id") + 1000000L).as("vec_id"),
-      expr("transform(v, x -> x * 2.0d)").as("v"))
-    val topk = Similarity.ivfPqTopKOn(
-      e.unionByName(planted),
-      q.select(col("vec_id").as("query_id"), col("v").as("qv")), k = 5)
-    topk.groupBy(col("query_id"))
-      .agg(max(when(col("neighbor_id") === col("query_id") + 1000000L &&
-        col("cos_sim") === 1.0, 1L).otherwise(0L)).as("found"))
-      .agg(count(lit(1)).as("n_queries"),
-        (sum(col("found")) === count(lit(1))).as("planted_ok"))
-  }
+  def ivfPqPlantedRecall(spark: SparkSession, dir: String): DataFrame =
+    plantedRecall(spark, dir, (c, q) => Similarity.ivfPqTopKOn(c, q, k = 5))
 
   /** q98: IVF-SQ planted-copy recall — the composed path must preserve both
     * constituent contracts at once: the plant's unit vector lands in the
@@ -171,21 +104,8 @@ object Accuracy {
     * the query's identical int8 scale + codes (SQ leg, q86's argument), so
     * it must survive cell pruning, ADC over-fetch, and exact re-rank at
     * cos 1.0. Deterministic end-to-end → oracle-checkable boolean. */
-  def ivfSqPlantedRecall(spark: SparkSession, dir: String): DataFrame = {
-    val e = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val q = e.filter(col("vec_id") < 10)
-    val planted = q.select((col("vec_id") + 1000000L).as("vec_id"),
-      expr("transform(v, x -> x * 2.0d)").as("v"))
-    val topk = Similarity.ivfSqTopKOn(
-      e.unionByName(planted),
-      q.select(col("vec_id").as("query_id"), col("v").as("qv")), k = 5)
-    topk.groupBy(col("query_id"))
-      .agg(max(when(col("neighbor_id") === col("query_id") + 1000000L &&
-        col("cos_sim") === 1.0, 1L).otherwise(0L)).as("found"))
-      .agg(count(lit(1)).as("n_queries"),
-        (sum(col("found")) === count(lit(1))).as("planted_ok"))
-  }
+  def ivfSqPlantedRecall(spark: SparkSession, dir: String): DataFrame =
+    plantedRecall(spark, dir, (c, q) => Similarity.ivfSqTopKOn(c, q, k = 5))
 
   /** q50: HLL error bound — approx_count_distinct(rsd=0.01) vs the exact
     * distinct count, per group, asserted within ±5% (5 standard errors).
@@ -221,21 +141,40 @@ object Accuracy {
     * the hash mismatches. Richer than the single-boolean twins: failures
     * localize to the query that broke. */
   private def plantedTopKGate(spark: SparkSession, dir: String,
-      run: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val e = graft.Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    val q = e.filter(col("vec_id") < 10)
-    val planted = q.select((col("vec_id") + 1000000L).as("vec_id"),
-      expr("transform(v, x -> x * 2.0d)").as("v"))
-    val topk = run(e.unionByName(planted),
-      q.select(col("vec_id").as("query_id"), col("v").as("qv")))
-    topk.groupBy(col("query_id"))
+      run: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    plantedTopK(spark, dir, run).groupBy(col("query_id"))
       .agg(min(when(col("neighbor_id") === col("query_id") + 1000000L,
           col("rn"))).as("rk"),
         max(when(col("neighbor_id") === col("query_id") + 1000000L,
           col("cos_sim"))).as("ps"))
       .select(col("query_id"), col("rk").cast("long").as("plant_rank"),
         col("ps").cast("double").as("plant_sim"))
+
+  /** The single-boolean recall twins (q49/q52/q75/q86/q88/q98) of the
+    * per-query gates: over the same planted corpus, did EVERY query find
+    * its plant anywhere in its top-k at similarity 1.0? One row:
+    * (n_queries, planted_ok). */
+  private def plantedRecall(spark: SparkSession, dir: String,
+      run: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    plantedTopK(spark, dir, run).groupBy(col("query_id"))
+      .agg(max(when(col("neighbor_id") === col("query_id") + 1000000L &&
+        col("cos_sim") === 1.0, 1L).otherwise(0L)).as("found"))
+      .agg(count(lit(1)).as("n_queries"),
+        (sum(col("found")) === count(lit(1))).as("planted_ok"))
+
+  /** `run`'s top-k of the first ten embeddings (query_id, qv) over the
+    * corpus plus a scaled copy of each (vec_id + 10⁶, ×2 magnitude: same
+    * direction, so cosine exactly 1.0 — and a genuinely geometric path,
+    * not an equality shortcut). */
+  private def plantedTopK(spark: SparkSession, dir: String,
+      run: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val e = graft.Tables.embeddings(spark, dir)
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    val q = e.filter(col("vec_id") < 10)
+    val planted = q.select((col("vec_id") + 1000000L).as("vec_id"),
+      expr("transform(v, x -> x * 2.0d)").as("v"))
+    run(e.unionByName(planted),
+      q.select(col("vec_id").as("query_id"), col("v").as("qv")))
   }
 
   /** q29 gate: sign-LSH top-k, per-query planted rank/sim. */

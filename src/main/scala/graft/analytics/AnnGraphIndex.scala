@@ -251,7 +251,9 @@ object AnnGraphIndex {
     // exists to prevent); build/compact clear it when they enforce the
     // cap physically
     TableProps.set(spark, s"${name}_entries", OvercapProp -> "true")
-    val ids = Materialize(newVecs.select(col("vec_id"), col("v")))
+    // the batch size for the stored vector count rides the materializing
+    // job ([[Materialize.counted]]) — no count job of its own
+    val (ids, batchSize) = Materialize.counted(newVecs.select(col("vec_id"), col("v")))
     val cents = spark.table(s"${name}_entries")
       .select(col("cid"), col("cv"))
     val assigned = Materialize(Similarity.assignCellsOn(ids, cents))
@@ -279,20 +281,17 @@ object AnnGraphIndex {
     // b, b picks a) appears in kept both ways, so a bare union would
     // append the same (src, dst) twice
     val ne = Bucketed.bucketsOf(spark, s"${name}_edges")
-    val nv = Bucketed.bucketsOf(spark, s"${name}_vectors")
-    // grid-aligned appends (the compactBucketed alignment trick: same
-    // Murmur3, task i == bucket i) so every extend leaves exactly ONE
-    // file per touched bucket — a bucketed append does not shuffle on
-    // its own, so a wide batch writes one file per (task, bucket) and
-    // multiplies the small-file debt the compaction verb then pays down.
-    // The edges side repartitions BEFORE its dedup aggregate (the
-    // bidirectional union holds an intra-batch mutual pair both ways):
-    // hashing by src at the bucket width satisfies the (src, dst)
-    // clustering, the aggregate preserves the distribution, and the
-    // write consumes it — one exchange end-to-end (guide §2.4). The two
-    // appends hit disjoint tables and fan on driver threads (guide
-    // §2.6); the nvec property update stays strictly after both, so the
-    // crash-gap story (undercount, healed at compact) is unchanged.
+    // grid-aligned appends (task i == bucket i) so every extend leaves
+    // exactly ONE file per touched bucket. The vectors append is
+    // [[Bucketed.appendBucketed]]; the edges side keeps its own shape: it
+    // repartitions BEFORE its dedup aggregate (the bidirectional union
+    // holds an intra-batch mutual pair both ways) — hashing by src at the
+    // bucket width satisfies the (src, dst) clustering, the aggregate
+    // preserves the distribution, and the write consumes it — one
+    // exchange end-to-end (guide §2.4). The two appends hit disjoint
+    // tables and fan on driver threads (guide §2.6); the nvec property
+    // update stays strictly after both, so the crash-gap story
+    // (undercount, healed at compact) is unchanged.
     val both = kept.unionByName(
         kept.select(col("dst").as("src"), col("src").as("dst"), col("sim")))
       .repartition(ne, col("src"))
@@ -301,10 +300,8 @@ object AnnGraphIndex {
       () => both.write.mode("append")
         .bucketBy(ne, "src").sortBy("src")
         .format("parquet").saveAsTable(s"${name}_edges"),
-      () => assigned.select(col("vec_id"), col("v"), col("cid"))
-        .repartition(nv, col("vec_id")).write
-        .mode("append").bucketBy(nv, "vec_id").sortBy("vec_id")
-        .format("parquet").saveAsTable(s"${name}_vectors")))
+      () => Bucketed.appendBucketed(assigned.select(col("vec_id"), col("v"), col("cid")),
+        s"${name}_vectors", "vec_id")))
     // count AFTER the appends (a crash in the gap undercounts — the
     // conservative direction for the exact-serve boundary is irrelevant
     // at ±1 batch, and compact re-derives the exact value). A PRE-EXISTING
@@ -316,7 +313,7 @@ object AnnGraphIndex {
     // already pays driver-synchronous jobs; the post-append count includes
     // this batch, so nothing is added on top).
     val nvec = TableProps.get(spark, s"${name}_entries", NvecProp) match {
-      case Some(n) => n.toLong + ids.count()
+      case Some(n) => n.toLong + batchSize
       case None => spark.table(s"${name}_vectors").count()
     }
     TableProps.set(spark, s"${name}_entries", NvecProp -> nvec.toString)
@@ -546,9 +543,10 @@ object AnnGraphIndex {
           .distinct()
         Materialize(kept.join(dropsSym, Seq("src", "dst"), "left_anti"))
       }
-    val vectors = Materialize(retained(spark.table(s"${name}_vectors"), "vec_id"))
-    // one live count feeds the stored count and both tables' width
-    val nvec = vectors.count()
+    // one live count — observed by the materializing job — feeds the
+    // stored count and both tables' width
+    val (vectors, nvec) = Materialize.counted(
+      retained(spark.table(s"${name}_vectors"), "vec_id"))
     val nb = Bucketed.grownBuckets(spark, s"${name}_edges", nvec)
     val nv = Bucketed.grownBuckets(spark, s"${name}_vectors", nvec)
     // density is a maintenance-time quantity: recompute from the rewritten
@@ -559,12 +557,10 @@ object AnnGraphIndex {
     // already materialized (the graft.functions.Par discipline).
     var density = 0.0
     graft.functions.Par.inParallel(Seq(
-      () => Bucketed.replaceTable(spark, s"${name}_edges", staging =>
-        edges.repartition(nb, col("src")).write.bucketBy(nb, "src")
-          .sortBy("src").format("parquet").saveAsTable(staging)),
-      () => Bucketed.replaceTable(spark, s"${name}_vectors", staging =>
-        vectors.repartition(nv, col("vec_id")).write.bucketBy(nv, "vec_id")
-          .sortBy("vec_id").format("parquet").saveAsTable(staging)),
+      () => Bucketed.replaceTable(spark, s"${name}_edges",
+        Bucketed.writeBucketed(edges, _, "src", nb)),
+      () => Bucketed.replaceTable(spark, s"${name}_vectors",
+        Bucketed.writeBucketed(vectors, _, "vec_id", nv)),
       () => density = profileOn(edges, k)._1))
     if (log.isDefined) {
       // snapshot BEFORE writeEntries drops the table the plan reads from
@@ -619,18 +615,12 @@ object AnnGraphIndex {
   }
 
   /** Deploy a rebuilt generation over the live name — the q217 pattern;
-    * pending live deletions carry forward inside [[TableSwap.swapIn]].
-    * Both generations heal FIRST: all three tables are replaceTable-
-    * managed, so a compact that died in a DROP→RENAME gap on the staging
-    * generation would otherwise read as "table absent" to TableSwap's
-    * skip-if-done suffix loop and deploy a MIXED generation (old edges
-    * against new vectors) with no error — the LexIndex.swapIn
-    * discipline. */
-  def swapIn(spark: SparkSession, staging: String, live: String): Unit = {
-    healedTables(spark, staging)
-    healedTables(spark, live)
+    * pending live deletions carry forward inside [[TableSwap.swapIn]],
+    * which also heals both generations' tables first (a compact that died
+    * in a DROP→RENAME gap must not read as "table absent" and deploy a
+    * MIXED generation). */
+  def swapIn(spark: SparkSession, staging: String, live: String): Unit =
     TableSwap.swapIn(spark, staging, live, Suffixes)
-  }
 
   private def healedTables(spark: SparkSession, name: String): Unit =
     Suffixes.foreach(s => Bucketed.healInterruptedReplace(spark, name + s))

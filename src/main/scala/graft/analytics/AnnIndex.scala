@@ -53,7 +53,7 @@ object AnnIndex {
   private[analytics] def buildFrom(vecs: DataFrame, centroids: DataFrame,
       assigned: DataFrame, name: String): Unit = {
     val spark = vecs.sparkSession
-    for (t <- Seq(s"${name}_centroids", s"${name}_cells", s"${name}_label_stats")) {
+    for (t <- Suffixes.map(name + _)) {
       spark.sql(s"DROP TABLE IF EXISTS $t")
       graft.sink.ManagedPaths.clearStale(spark, t)
     }
@@ -144,8 +144,9 @@ object AnnIndex {
     * semi-join scan of the index — at maintenance cadence, not per
     * request; a service purging hourly would keep an id→cid map instead),
     * rewrite exactly those partitions through [[compact]] (whose snapshot
-    * drops tombstoned rows), then reset the log. Untouched cells' files
-    * are not rewritten — or even opened. */
+    * drops tombstoned rows, and which drops a cell every one of whose
+    * vectors was deleted), then reset the log. Untouched cells' files are
+    * not rewritten — or even opened. */
   def purgeTombstones(spark: SparkSession, name: String): Unit =
     Tombstones.of(spark, name).foreach { log =>
       val cells = spark.table(s"${name}_cells")
@@ -229,63 +230,27 @@ object AnnIndex {
     * AnnIndexStream) appends a few small files into each touched `cid=…`
     * partition per micro-batch, and after N extends every probe pays N
     * file-opens per cell (the classic streaming-index small-file
-    * pathology). This rewrites each cell's rows into ONE file, in place,
-    * answers unchanged: rows are snapshotted THROUGH [[graft.functions.
-    * Materialize]] (the read must not race its own overwrite), shuffled
-    * once on cid so each cell lands in a single task, and written back
-    * with DYNAMIC partition overwrite — only the partitions being
-    * compacted are replaced; `cids` scopes the pass to chosen cells (the
-    * production form: compact the cells today's ingest touched, leave the
-    * other 99% of a 100 TB index untouched). */
-  def compact(spark: SparkSession, name: String, cids: Option[Seq[Long]] = None): Unit = {
-    val cells = spark.table(s"${name}_cells")
-    val slice = cids.map(cs => cells.filter(col("cid").isin(cs: _*))).getOrElse(cells)
-    // the rewrite drops tombstoned rows from the cells it touches (the log
-    // itself only resets in purgeTombstones, which scopes a pass to ALL
-    // affected cells — a threshold-scoped compact may leave tombstoned
-    // rows elsewhere, still masked by the merge-on-read filter)
-    val snap = graft.functions.Materialize(
-      Tombstones.filter(slice, name, "vec_id")
-        .select(cells.columns.toIndexedSeq.map(col): _*).repartition(col("cid")))
-    graft.sink.CrashPoints.reached("anncompact.snapshotted")
-    // the dynamic overwrite commits per partition at job commit — one
-    // all-or-nothing durable op from the sweep's point of view. The mode
-    // is conf-isolated per call (graft.sink.DynamicOverwrite): a session
-    // set/restore racing a concurrent sibling would flip a cid-scoped
-    // pass to STATIC mid-flight and truncate every unselected cell's
-    // rows with no crash.
-    graft.sink.DynamicOverwrite.insertInto(snap, s"${name}_cells")
-    graft.sink.CrashPoints.reached("anncompact.rewritten")
-  }
+    * pathology). [[graft.sink.Bucketed.compactPartitioned]] rewrites each
+    * cell's rows into ONE file, in place, answers unchanged; `cids` scopes
+    * the pass to chosen cells (the production form: compact the cells
+    * today's ingest touched, leave the other 99% of a 100 TB index
+    * untouched). The rewrite drops tombstoned rows from the cells it
+    * touches, and a cell left empty loses its partition. The log itself
+    * only resets in [[purgeTombstones]], which scopes a pass to ALL
+    * affected cells — a threshold-scoped compact may leave tombstoned rows
+    * elsewhere, still masked by the merge-on-read filter. */
+  def compact(spark: SparkSession, name: String, cids: Option[Seq[Long]] = None): Unit =
+    graft.sink.Bucketed.compactPartitioned(spark, s"${name}_cells", "cid",
+      Tombstones.filter(_, name, "vec_id"), only = cids)
 
-  /** Threshold-scoped compaction DRIVER — the piece that turns [[compact]]
-    * into a standing maintenance policy: read each cell's physical file
-    * count from `_metadata` provenance (the scan itself reports the
-    * layout — no filesystem walk), pick the cells whose count exceeds
-    * `threshold`, and run ONE [[compact]] pass scoped to exactly those
-    * cells. All selected cells rewrite in parallel inside a single job
-    * (compact's repartition(cid) gives each its own task); unselected
-    * cells are not rewritten — their files aren't even opened by the
-    * overwrite. The decision list is O(#cells) metadata held briefly on
-    * the driver, the same cardinality a lakehouse OPTIMIZE planner holds;
-    * at 100 TB that is thousands of cells, not data. Returns the plan it
+  /** Threshold-scoped compaction: [[compact]] exactly the cells whose
+    * physical file count exceeds `threshold`
+    * ([[graft.sink.Bucketed.compactOverThreshold]]) and return the plan it
     * acted on: (cid, n_files, needs_compaction). */
-  def compactionPlan(spark: SparkSession, name: String, threshold: Int): DataFrame =
-    spark.table(s"${name}_cells")
-      .select(col("cid"), col("_metadata.file_path").as("fp"))
-      .groupBy(col("cid"))
-      .agg(countDistinct(col("fp")).as("n_files"))
-      .withColumn("needs_compaction", col("n_files") > threshold)
-
   def compactOverThreshold(spark: SparkSession, name: String, threshold: Int): DataFrame = {
-    // snapshot the plan BEFORE acting on it — the plan's `_metadata` scan
-    // is lazy, so the un-materialized frame would re-list the layout
-    // after the rewrite and report the post-compaction file counts
-    val rows = compactionPlan(spark, name, threshold).collect()
-    val cids = rows.filter(_.getBoolean(2)).map(_.getLong(0)).toSeq
-    if (cids.nonEmpty) compact(spark, name, Some(cids))
     import spark.implicits._
-    rows.map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
+    graft.sink.Bucketed.compactOverThreshold(spark, s"${name}_cells", "cid",
+      threshold, Tombstones.filter(_, name, "vec_id"))
       .toDF("cid", "n_files", "needs_compaction")
   }
 
@@ -309,11 +274,7 @@ object AnnIndex {
     compact(spark, "graft_ann_cmp")
     val top = topKAgainst(spark, "graft_ann_cmp",
       q.select(col("vec_id").as("query_id"), col("v").as("qv")), k = 5)
-    q.select(col("vec_id").as("query_id"))
-      .join(top.filter(col("rn") === 1), Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("neighbor_id") === col("query_id") + 1000000L &&
-          col("cos_sim") === 1.0, lit(false)).as("found"))
+    plantFound(q, top)
   }
 
   /** Append new vectors, assigned with the stored quantizer. The select
@@ -386,14 +347,6 @@ object AnnIndex {
         round(col("sim"), 4).as("cos_sim"), col("rn")) ++ keep.map(col): _*)
   }
 
-  /** q161: oracle gate, planted-recall form through BOTH index legs — the
-    * index is [[build]]t on the corpus, then [[extend]]ed with a scaled
-    * copy (vec_id + 10⁶, ×2 magnitude — same direction, so cosine exactly
-    * 1.0 and the same nearest cell as the query's own vector) of every
-    * query vector. Each query's top-1 through the pruned-scan path MUST be
-    * its planted copy at similarity 1.0; any breakage in training,
-    * assignment, the stored layout, dynamic pruning, or the probe window
-    * falsifies it. */
   /** Deploy a rebuilt generation: rename the staging tables over the live
     * names. The q166 refresh loop's missing last step — `refreshDecision`
     * says rebuild, [[build]] writes the new generation into a STAGING name
@@ -409,8 +362,10 @@ object AnnIndex {
     * generation was built from the current corpus and has nothing to
     * forget. */
   def swapIn(spark: SparkSession, staging: String, live: String): Unit =
-    graft.sink.TableSwap.swapIn(spark, staging, live,
-      Seq("_centroids", "_cells", "_label_stats"))
+    graft.sink.TableSwap.swapIn(spark, staging, live, Suffixes)
+
+  /** The index's tables: what a build replaces and a swap renames. */
+  private val Suffixes = Seq("_centroids", "_cells", "_label_stats")
 
   /** q217: the rebuild-and-swap gate — the serving flow a retrieval
     * service runs when q166 votes rebuild: the LIVE index (built on the
@@ -437,11 +392,7 @@ object AnnIndex {
     swapIn(spark, s"${live}_stg", live)
     val top = topKAgainst(spark, live,
       q.select(col("vec_id").as("query_id"), col("v").as("qv")), k = 5)
-    q.select(col("vec_id").as("query_id"))
-      .join(top.filter(col("rn") === 1), Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("neighbor_id") === col("query_id") + 1000000L &&
-          col("cos_sim") === 1.0, lit(false)).as("found"))
+    plantFound(q, top)
   }
 
   /** q207: the DELETE gate, planted-recall form through BOTH delete paths.
@@ -464,17 +415,11 @@ object AnnIndex {
       expr("transform(v, x -> x * 2.0d)").as("v")), name)
     delete(q.filter(col("vec_id") < 5)
       .select((col("vec_id") + 1000000L).as("vec_id")), name)
-    def foundCol(top: DataFrame): DataFrame =
-      q.select(col("vec_id").as("query_id"))
-        .join(top.filter(col("rn") === 1), Seq("query_id"), "left")
-        .select(col("query_id"),
-          coalesce(col("neighbor_id") === col("query_id") + 1000000L &&
-            col("cos_sim") === 1.0, lit(false)).as("found"))
     val queries = q.select(col("vec_id").as("query_id"), col("v").as("qv"))
     val mor = graft.functions.Materialize(
-      foundCol(topKAgainst(spark, name, queries, k = 5)))
+      plantFound(q, topKAgainst(spark, name, queries, k = 5)))
     purgeTombstones(spark, name) // targeted in-layout rewrite; log resets
-    val purged = foundCol(topKAgainst(spark, name, queries, k = 5))
+    val purged = plantFound(q, topKAgainst(spark, name, queries, k = 5))
     mor.withColumnRenamed("found", "found_mor")
       .join(purged.withColumnRenamed("found", "found_purged"), Seq("query_id"))
   }
@@ -508,11 +453,7 @@ object AnnIndex {
       qs.select(col("query_id"), col("qv"), col("olabel")),
       k = 5, candFilter = Some(col("label") === col("olabel")),
       keep = Seq("label", "olabel"))
-    val foundSame = q.select(col("vec_id").as("query_id"))
-      .join(same.filter(col("rn") === 1), Seq("query_id"), "left")
-      .select(col("query_id"),
-        coalesce(col("neighbor_id") === col("query_id") + 1000000L &&
-          col("cos_sim") === 1.0, lit(false)).as("found_same"))
+    val foundSame = plantFound(q, same).withColumnRenamed("found", "found_same")
     val otherAgg = other.groupBy(col("query_id")).agg(
       max(col("neighbor_id") === col("query_id") + 1000000L).as("has_copy"),
       min(col("label") === col("olabel")).as("all_match"))
@@ -523,6 +464,14 @@ object AnnIndex {
         coalesce(col("all_match"), lit(true)).as("filter_respected"))
   }
 
+  /** q161: oracle gate, planted-recall form through BOTH index legs — the
+    * index is [[build]]t on the corpus, then [[extend]]ed with a scaled
+    * copy (vec_id + 10⁶, ×2 magnitude — same direction, so cosine exactly
+    * 1.0 and the same nearest cell as the query's own vector) of every
+    * query vector. Each query's top-1 through the pruned-scan path MUST be
+    * its planted copy at similarity 1.0; any breakage in training,
+    * assignment, the stored layout, dynamic pruning, or the probe window
+    * falsifies it. */
   def plantedRecallGate(spark: SparkSession, dir: String): DataFrame = {
     val e = embeddings(spark, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -532,11 +481,16 @@ object AnnIndex {
       expr("transform(v, x -> x * 2.0d)").as("v")), "graft_ann_idx")
     val top = topKAgainst(spark, "graft_ann_idx",
       q.select(col("vec_id").as("query_id"), col("v").as("qv")), k = 5)
+    plantFound(q, top)
+  }
+
+  /** Per query of `q` (vec_id, …): is its top-1 in `top` the planted copy
+    * (vec_id + 10⁶) at cosine exactly 1.0 — the planted-copy verdict every
+    * gate here states. */
+  private def plantFound(q: DataFrame, top: DataFrame): DataFrame =
     q.select(col("vec_id").as("query_id"))
       .join(top.filter(col("rn") === 1), Seq("query_id"), "left")
       .select(col("query_id"),
         coalesce(col("neighbor_id") === col("query_id") + 1000000L &&
           col("cos_sim") === 1.0, lit(false)).as("found"))
-  }
 }
-

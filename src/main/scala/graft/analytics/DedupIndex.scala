@@ -164,8 +164,7 @@ object DedupIndex {
         spark.sql(s"DROP TABLE IF EXISTS $live$s")
         graft.sink.ManagedPaths.clearStale(spark, live + s)
       }
-    graft.sink.TableSwap.swapIn(spark, staging, live,
-      Seq("_sigs", "_bands") ++ ClusterSuffixes)
+    graft.sink.TableSwap.swapIn(spark, staging, live, Suffixes ++ ClusterSuffixes)
   }
 
   /** Append a new batch into the existing index — the bucket spec is read
@@ -216,13 +215,7 @@ object DedupIndex {
     // ordering is internal to its leg and preserved)
     timed("ext.append")(graft.functions.Par.inParallel(Seq(
       () => timed("ext.append.sigs") {
-        // grid-aligned append: one file per touched bucket regardless of
-        // the batch's shuffle width (the Bucketed.writeBucketed
-        // discipline)
-        val ns = Bucketed.bucketsOf(spark, s"${name}_sigs")
-        sigs.repartition(ns, col("doc_id")).write.mode("append")
-          .bucketBy(ns, "doc_id")
-          .sortBy("doc_id").format("parquet").saveAsTable(s"${name}_sigs")
+        Bucketed.appendBucketed(sigs, s"${name}_sigs", "doc_id")
         graft.sink.CrashPoints.reached("dedupext.sigs")
       },
       () => timed("ext.append.bands") {
@@ -239,13 +232,16 @@ object DedupIndex {
     * two tables (a compact crashed in its DROP→RENAME gap must not make
     * the next probe throw, or the next extend create-and-orphan). */
   private def healedTables(spark: SparkSession, name: String): Unit =
-    Seq("_sigs", "_bands").foreach(s =>
-      Bucketed.healInterruptedReplace(spark, name + s))
+    Suffixes.foreach(s => Bucketed.healInterruptedReplace(spark, name + s))
 
-  /** Compaction for the index tables — the dedup twin of
-    * [[AnnIndex.compact]]: every [[extend]] (and every DedupIndexStream
-    * micro-batch) appends one file per touched bucket or slice, so after
-    * N extends each index scan opens N files per bucket. Rewrites each
+  /** The signature-family tables (the cluster surface's are
+    * [[ClusterSuffixes]]). */
+  private val Suffixes = Seq("_sigs", "_bands")
+
+  /** Compaction for the index tables: every [[extend]] (and every
+    * DedupIndexStream micro-batch) appends one file per touched bucket or
+    * slice, so after N extends each index scan opens N files per bucket.
+    * Rewrites each
     * bucketed table to ONE file per bucket under the same spec via
     * [[Bucketed.compactBucketed]] (the snapshot-before-repartition trap
     * and the warehouse-scale swap story live there), and each partitioned
@@ -283,10 +279,10 @@ object DedupIndex {
     Tombstones.clear(spark, name)
   }
 
-  /** Targeted compaction POLICY for the partitioned surfaces — the
-    * [[AnnIndex.compactOverThreshold]] discipline applied to `_bands`
-    * (and `_pfx` on a clustered index): read each partition's physical
-    * file count from `_metadata` provenance, rewrite ONLY the slices
+  /** Targeted compaction POLICY for the partitioned surfaces —
+    * [[Bucketed.compactOverThreshold]] on `_bands` (and `_pfx` on a
+    * clustered index): read each partition's physical file count from
+    * `_metadata` provenance, rewrite ONLY the slices
     * whose count exceeds `threshold`, leave the other 99% of a 100 TB
     * index unread. This is the standing maintenance verb a daily-ingest
     * loop actually wants — each [[extend]] appends one file per touched
@@ -303,31 +299,22 @@ object DedupIndex {
   def compactOverThreshold(spark: SparkSession, name: String,
       threshold: Int): DataFrame = {
     healedTables(spark, name)
-    val tables = Seq(s"${name}_bands" -> "pb") ++
-      (if (isClustered(spark, name)) Seq(s"${name}_pfx" -> "ps") else Nil)
-    val plans = tables.map { case (table, partCol) =>
-      // snapshot the plan BEFORE acting on it — the `_metadata` scan is
-      // lazy and would re-list the rewritten layout
-      val rows = Bucketed.partitionedCompactionPlan(
-        spark, table, partCol, threshold).collect()
-      val over = rows.filter(_.getBoolean(2)).map(_.getLong(0)).toSeq
-      (table, partCol, rows, over)
-    }
-    // the selected rewrites are disjoint tables — fan on driver threads.
-    // Per-table transforms mirror [[compact]]'s legs exactly: bands purge
-    // tombstones; prefixes additionally collapse replay duplicates.
-    graft.functions.Par.inParallel(plans.collect {
-      case (table, partCol, _, over) if over.nonEmpty => () =>
-        Bucketed.compactPartitioned(spark, table, partCol,
-          df =>
-            if (partCol == "ps") Tombstones.filter(df, name, "doc_id").distinct()
-            else Tombstones.filter(df, name, "doc_id"),
-          only = Some(over))
+    // per-table transforms mirror [[compact]]'s legs exactly: bands purge
+    // tombstones; prefixes additionally collapse replay duplicates
+    val purged = (df: DataFrame) => Tombstones.filter(df, name, "doc_id")
+    val tables = Seq(("_bands", "pb", purged)) ++
+      (if (isClustered(spark, name)) Seq(("_pfx", "ps", purged.andThen(_.distinct())))
+      else Nil)
+    // disjoint tables — each plan-and-rewrite fans on its own driver thread
+    val plans = Array.fill(tables.length)(Seq.empty[(Long, Long, Boolean)])
+    graft.functions.Par.inParallel(tables.zipWithIndex.map {
+      case ((sfx, partCol, transform), i) => () =>
+        plans(i) = Bucketed.compactOverThreshold(spark, name + sfx, partCol,
+          threshold, transform)
     })
     import spark.implicits._
-    plans.flatMap { case (table, _, rows, _) =>
-      rows.map(r => (table.stripPrefix(name + "_"),
-        r.getLong(0), r.getLong(1), r.getBoolean(2)))
+    tables.zip(plans).flatMap { case ((sfx, _, _), plan) =>
+      plan.map { case (part, n, over) => (sfx.stripPrefix("_"), part, n, over) }
     }.toDF("table", "part", "n_files", "needs_compaction")
   }
 
@@ -638,11 +625,7 @@ object DedupIndex {
     graft.functions.Par.inParallel(Seq(
       () => timed("cluext.append")(graft.functions.Par.inParallel(Seq(
         () => timed("cluext.append.shg") {
-          // grid-aligned append (the Bucketed.writeBucketed discipline)
-          val nh = Bucketed.bucketsOf(spark, s"${name}_shg")
-          batch.repartition(nh, col("doc_id")).write.mode("append")
-            .bucketBy(nh, "doc_id")
-            .sortBy("doc_id").format("parquet").saveAsTable(s"${name}_shg")
+          Bucketed.appendBucketed(batch, s"${name}_shg", "doc_id")
           graft.sink.CrashPoints.reached("cluext.shg")
         },
         () => timed("cluext.append.pfx") {
@@ -682,8 +665,8 @@ object DedupIndex {
     // per verified batch pair, after same-label collapse), so its CC runs
     // as a driver union-find — the iterative distributed CC pays 2+ jobs
     // of fixed latency PER ROUND for a graph that fits in a page; this is
-    // the compactionPlan cardinality discipline (O(request) metadata on
-    // the driver, never corpus rows). Corpus-scale CC (buildClustered,
+    // the compaction planner's cardinality discipline (O(request) metadata
+    // on the driver, never corpus rows). Corpus-scale CC (buildClustered,
     // repairClusters) stays distributed.
     val lblPairs = timed("cluext.contract")(edges
       .join(endLbl.select(col("doc_id").as("a"), col("lbl").as("la")), "a")
@@ -702,7 +685,8 @@ object DedupIndex {
       .join(rootDf, col("lbl") === col("node"), "left")
       .select(col("doc_id"),
         coalesce(col("label"), col("lbl")).as("label"), ver.as("ver"))
-    timed("cluext.rows")(appendClusterRows(spark, name, batchRows))
+    timed("cluext.rows")(
+      Bucketed.appendBucketed(batchRows, s"${name}_clusters", "doc_id"))
     graft.sink.CrashPoints.reached("cluext.clusters")
     // merged OLD roots (labels some stored doc currently resolves to)
     // become path-compressed map entries; existing entries re-point. A
@@ -800,7 +784,7 @@ object DedupIndex {
           .join(cc, col("doc_id") === col("node"), "left")
           .select(col("doc_id"),
             coalesce(col("label"), col("doc_id")).as("label"), ver.as("ver"))
-        appendClusterRows(spark, name, rows)
+        Bucketed.appendBucketed(rows, s"${name}_clusters", "doc_id")
         graft.sink.CrashPoints.reached("clurepair.appended")
         val om = spark.table(s"${name}_labelmap")
         val cleaned = om.join(broadcast(affected),
@@ -839,21 +823,12 @@ object DedupIndex {
             lit(0L).as("ver")))
         val nb = Bucketed.grownBuckets(spark, s"${name}_clusters", rows)
         Bucketed.replaceTable(spark, s"${name}_clusters", { staging =>
-          folded.repartition(nb, col("doc_id")).write.bucketBy(nb, "doc_id")
-            .sortBy("doc_id").format("parquet").saveAsTable(staging)
+          Bucketed.writeBucketed(folded, staging, "doc_id", nb)
           TableProps.set(spark, staging,
             ThresholdProp -> threshold.toString, VerProp -> "0")
         })
         writeLabelMap(spark, name, emptyLabelMap(spark))
       })
-  }
-
-  private def appendClusterRows(spark: SparkSession, name: String,
-      rows: DataFrame): Unit = {
-    // grid-aligned append (the Bucketed.writeBucketed discipline)
-    val nb = Bucketed.bucketsOf(spark, s"${name}_clusters")
-    rows.repartition(nb, col("doc_id")).write.mode("append").bucketBy(nb, "doc_id")
-      .sortBy("doc_id").format("parquet").saveAsTable(s"${name}_clusters")
   }
 
   private def emptyLabelMap(spark: SparkSession): DataFrame =

@@ -177,10 +177,10 @@ object LexIndex {
     * the flipped log or a soon-discarded delta into the old stats; the
     * swapIn re-run re-anchors both away. */
   def swapIn(spark: SparkSession, staging: String, live: String): Unit = {
-    // heal both generations' tables first: the staging-dl existence check
-    // below must not be fooled by a compact that died in a DROP→RENAME gap
+    // heal the staging generation's tables first: the staging-dl existence
+    // check below must not be fooled by a compact that died in a
+    // DROP→RENAME gap (TableSwap heals both generations for the renames)
     healedTables(spark, staging)
-    healedTables(spark, live)
     // Re-anchor only while the staging generation's dl still exists: once
     // TableSwap has renamed `_dl` onto the live name (a crash between the
     // _dl and _stats renames, or after TableSwap but before the final
@@ -191,8 +191,7 @@ object LexIndex {
     // skipped-if-done) and the final heal (round-9 ADVICE).
     if (spark.catalog.tableExists(s"${staging}_dl"))
       reanchorLog(spark, staging, live)
-    graft.sink.TableSwap.swapIn(spark, staging, live,
-      Seq("_postings", "_dl", "_stats"))
+    graft.sink.TableSwap.swapIn(spark, staging, live, Suffixes)
     healStats(spark, live) // idempotent convergence point; no-op when clean
   }
 
@@ -302,8 +301,10 @@ object LexIndex {
     * Tombstones' accessors already heal for the log (found by the
     * round-10 crash sweep). Three in-memory catalog lookups when clean. */
   private def healedTables(spark: SparkSession, name: String): Unit =
-    Seq("_postings", "_dl", "_stats").foreach(s =>
-      Bucketed.healInterruptedReplace(spark, name + s))
+    Suffixes.foreach(s => Bucketed.healInterruptedReplace(spark, name + s))
+
+  /** The index's tables: what a heal covers and a swap renames. */
+  private val Suffixes = Seq("_postings", "_dl", "_stats")
 
   /** The three table appends of one extend, individually callable so a
     * streaming loop can guard EACH with its own commit marker: unlike the
@@ -311,22 +312,18 @@ object LexIndex {
     * distinct'd), duplicated postings here would inflate tf and df, so
     * at-least-once appends are NOT acceptable and exactly-once must be
     * assembled per table (see LexIndexStream). */
-  private[graft] def appendPostings(docs: DataFrame, name: String): Unit = {
-    val n = Bucketed.bucketsOf(docs.sparkSession, s"${name}_postings")
-    postingsOf(docs).repartition(n, col("term")).write.mode("append")
-      .bucketBy(n, "term")
-      .sortBy("term").format("parquet").saveAsTable(s"${name}_postings")
-  }
+  private[graft] def appendPostings(docs: DataFrame, name: String): Unit =
+    Bucketed.appendBucketed(postingsOf(docs), s"${name}_postings", "term")
 
-  private[graft] def appendDl(docs: DataFrame, name: String): Unit = {
-    val n = Bucketed.bucketsOf(docs.sparkSession, s"${name}_dl")
-    dlOf(docs).repartition(n, col("doc_id")).write.mode("append")
-      .bucketBy(n, "doc_id")
-      .sortBy("doc_id").format("parquet").saveAsTable(s"${name}_dl")
-  }
+  private[graft] def appendDl(docs: DataFrame, name: String): Unit =
+    Bucketed.appendBucketed(dlOf(docs), s"${name}_dl", "doc_id")
 
   private[graft] def appendStatsDelta(docs: DataFrame, name: String): Unit =
-    dlOf(docs).agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+    appendStats(dlOf(docs), name)
+
+  /** One stats delta row summarizing a (doc_id, dl) frame. */
+  private def appendStats(dl: DataFrame, name: String): Unit =
+    dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
       .write.mode("append").format("parquet").saveAsTable(s"${name}_stats")
 
   /** Append a batch of NEW documents into the existing layout — ONE
@@ -351,10 +348,6 @@ object LexIndex {
     healedTables(spark, name)
     val postings = Materialize(postingsOf(docs.select(col("doc_id"), col("text"))))
     val dl = Materialize(dlFromPostings(postings))
-    // grid-aligned appends (the Bucketed.writeBucketed discipline): one
-    // file per touched bucket regardless of the batch's shuffle width
-    val nt = Bucketed.bucketsOf(spark, s"${name}_postings")
-    val nd = Bucketed.bucketsOf(spark, s"${name}_dl")
     // the postings append and the dl→stats chain write DISJOINT tables —
     // fan them (guide §2.6, the buildFrom discipline). Both inputs are
     // checkpoints, so neither leg recomputes the tokenize; stats stays
@@ -363,15 +356,10 @@ object LexIndex {
     // exactly-once streaming twin (LexIndexStream) guards each append
     // with its own marker and is unaffected.
     graft.functions.Par.inParallel(Seq(
-      () => postings.repartition(nt, col("term")).write.mode("append")
-        .bucketBy(nt, "term")
-        .sortBy("term").format("parquet").saveAsTable(s"${name}_postings"),
+      () => Bucketed.appendBucketed(postings, s"${name}_postings", "term"),
       () => {
-        dl.repartition(nd, col("doc_id")).write.mode("append")
-          .bucketBy(nd, "doc_id")
-          .sortBy("doc_id").format("parquet").saveAsTable(s"${name}_dl")
-        dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-          .write.mode("append").format("parquet").saveAsTable(s"${name}_stats")
+        Bucketed.appendBucketed(dl, s"${name}_dl", "doc_id")
+        appendStats(dl, name)
       }))
   }
 

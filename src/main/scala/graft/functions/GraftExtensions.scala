@@ -14,21 +14,22 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
-    GraftExtensions.registrations.foreach { case (name, builder) =>
+    GraftExtensions.registrations.foreach { case (name, owner, builder) =>
       ext.injectFunction(
-        (FunctionIdentifier(name),
-          new ExpressionInfo("graft.functions.Sketches", name),
-          builder))
+        (FunctionIdentifier(name), new ExpressionInfo(owner, name), builder))
     }
 }
 
 object GraftExtensions {
 
-  /** Every [[Kernels]] entry under its SQL name, plus the aggregates. */
-  val registrations: Seq[(String, Seq[Expression] => Expression)] =
-    Kernels.all.map(k => k.name -> (k.expr _)) ++ Seq(
+  /** Every [[Kernels]] entry under its SQL name, plus the aggregates: (SQL
+    * name, the class that implements it, builder). The class is what
+    * `DESCRIBE FUNCTION` reports — a kernel's `owner` object, an
+    * aggregate's own class. */
+  val registrations: Seq[(String, String, Seq[Expression] => Expression)] =
+    Kernels.all.map(k => (k.name, k.owner.getName.stripSuffix("$"), k.expr _)) ++ Seq(
     // kmv aggregates: k must be a foldable int literal
-    "kmv_sketch" -> (exprs => {
+    ("kmv_sketch", classOf[KmvSketch.KmvSketchAgg].getName, (exprs: Seq[Expression]) => {
       require(exprs.length <= 2, "kmv_sketch(hash_long[, k])")
       val k = if (exprs.length == 2) {
         require(exprs(1).foldable, "k must be a literal")
@@ -36,11 +37,13 @@ object GraftExtensions {
       } else 1024
       KmvSketch.KmvSketchAgg(exprs.head, k)
     }),
-    "kmv_merge" -> (exprs => KmvSketch.KmvMergeAgg(exprs.head)),
+    ("kmv_merge", classOf[KmvSketch.KmvMergeAgg].getName,
+      (exprs: Seq[Expression]) => KmvSketch.KmvMergeAgg(exprs.head)),
     // custom aggregate: the registry builder returns the AggregateFunction
     // itself; the analyzer wraps it. Percentiles must be a foldable literal
     // (scalar or array) — evaluated once at plan time.
-    "graft_quantile_sketch" -> (exprs => {
+    ("graft_quantile_sketch", classOf[QuantileSketch.QuantileSketchAgg].getName,
+      (exprs: Seq[Expression]) => {
       require(exprs.length == 2,
         "graft_quantile_sketch(value, percentile | array(percentiles))")
       val pExpr = exprs(1)
@@ -65,7 +68,7 @@ object GraftExtensions {
 
   /** Imperative registration on an existing session (tests, REPL). */
   def register(spark: SparkSession): Unit =
-    registrations.foreach { case (name, builder) =>
+    registrations.foreach { case (name, _, builder) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(
         name, builder, "built-in")
     }

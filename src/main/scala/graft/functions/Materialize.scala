@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions.{count, lit}
 
 /** Lineage-cutting materialization with a cluster-durability toggle.
@@ -38,8 +38,16 @@ object Materialize {
     * snapshot would add two (its aggregate's exchange runs as a separate
     * job under AQE). */
   def counted(df: DataFrame): (DataFrame, Long) = {
+    val (snap, seen) = observed(df, count(lit(1)).as("n"))
+    (snap, seen("n").asInstanceOf[Long])
+  }
+
+  /** [[apply]] plus named aggregates of the materialized rows, observed
+    * inside the materializing job the same way ([[counted]] is the row
+    * count alone). */
+  def observed(df: DataFrame, agg: Column, aggs: Column*): (DataFrame, Map[String, Any]) = {
     val obs = Observation()
-    val snap = apply(df.observe(obs, count(lit(1)).as("n")))
-    (snap, obs.get("n").asInstanceOf[Long])
+    val snap = apply(df.observe(obs, agg, aggs: _*))
+    (snap, obs.get)
   }
 }

@@ -75,6 +75,19 @@ object Bucketed {
       .saveAsTable(table)
   }
 
+  /** Append `df` into the existing bucketed `table` at its stored width
+    * ([[bucketsOf]]), grid-aligned the [[writeBucketed]] way: task i holds
+    * exactly bucket i, so an append writes ONE file per touched bucket
+    * whatever the batch's shuffle width (a bucketed write does not shuffle
+    * on its own, and a wide batch would otherwise leave one file per
+    * (task, bucket) for the next compaction to pay down). */
+  def appendBucketed(df: DataFrame, table: String, key: String): Unit = {
+    import org.apache.spark.sql.functions.col
+    val n = bucketsOf(df.sparkSession, table)
+    df.repartition(n, col(key)).write.mode("append")
+      .bucketBy(n, key).sortBy(key).format("parquet").saveAsTable(table)
+  }
+
   /** Join two same-bucketed tables on their bucket key — plans with zero
     * Exchange nodes (verify with `.explain`). */
   def colocatedJoin(spark: SparkSession, leftTable: String, rightTable: String,
@@ -209,20 +222,16 @@ object Bucketed {
     * wider width when the live rows call for one. It never shrinks. */
   def compactBucketed(spark: SparkSession, table: String, key: String,
       transform: DataFrame => DataFrame = identity): Unit = {
-    import org.apache.spark.sql.functions.col
     healInterruptedReplace(spark, table)
     // `transform` lets the rewrite fold in answer-preserving maintenance the
     // caller already owes — the indexes pass their tombstone anti-join here,
     // making compaction the physical purge point (Tombstones' copy-on-write
     // half). It runs BEFORE the snapshot so the rewrite never materializes
     // rows it is about to drop.
-    val (snap0, rows) = graft.functions.Materialize.counted(transform(spark.table(table)))
+    val (snap, rows) = graft.functions.Materialize.counted(transform(spark.table(table)))
     val n = grownBuckets(spark, table, rows)
-    val snap = snap0.repartition(n, col(key))
     CrashPoints.reached("compact.snapshotted")
-    replaceTable(spark, table, staging =>
-      snap.write.bucketBy(n, key).sortBy(key).format("parquet")
-        .saveAsTable(staging))
+    replaceTable(spark, table, writeBucketed(snap, _, key, n))
   }
 
   // ==================================================================
@@ -261,11 +270,11 @@ object Bucketed {
     TableProps.set(spark, table, PartsProp -> parts.toString)
   }
 
-  /** Per-partition physical file counts from `_metadata` provenance —
-    * the scan itself reports the layout, no filesystem walk (the
-    * [[graft.analytics.AnnIndex.compactionPlan]] discipline for
-    * [[writePartitioned]] tables): the decision input of a targeted
-    * compaction policy. O(#partitions) driver metadata. */
+  /** Per-partition physical file counts of a [[writePartitioned]] table
+    * from `_metadata` provenance — the scan itself reports the layout, no
+    * filesystem walk: (part, n_files, needs_compaction), the decision input
+    * of [[compactOverThreshold]]. O(#partitions) driver metadata, the
+    * cardinality a lakehouse OPTIMIZE planner holds. */
   def partitionedCompactionPlan(spark: SparkSession, table: String,
       partCol: String, threshold: Int): DataFrame = {
     import org.apache.spark.sql.functions.{col, countDistinct}
@@ -317,8 +326,8 @@ object Bucketed {
   final case class Regrid(width: Long => Int,
       derive: (DataFrame, Int) => DataFrame)
 
-  /** In-layout compaction of a partitioned index table — the
-    * [[graft.analytics.AnnIndex.compact]] discipline shared: snapshot
+  /** In-layout compaction of a partitioned index table (the dedup
+    * `_bands`/`_pfx` slices, the ANN `_cells`): snapshot
     * through Materialize (the read must not race its own overwrite),
     * rewrite every partition present in the snapshot to ONE file via
     * DYNAMIC partition overwrite (commits at job commit — all-or-nothing
@@ -342,7 +351,7 @@ object Bucketed {
       transform: DataFrame => DataFrame = identity,
       only: Option[Seq[Long]] = None,
       regrid: Option[Regrid] = None): Unit = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, collect_set, count, lit}
     require(only.isEmpty || regrid.isEmpty,
       "a slice-scoped compaction cannot re-grid the table")
     val t0 = spark.table(table)
@@ -354,15 +363,18 @@ object Bucketed {
     // (an unselected partition is absent from the snapshot by
     // construction, not emptied).
     val t = only.map(vs => t0.filter(col(partCol).isin(vs: _*))).getOrElse(t0)
-    val snap0 = graft.functions.Materialize(
-      transform(t).select(t0.columns.toIndexedSeq.map(col): _*))
-    // ONE job over the checkpointed snapshot: its per-slice counts give
-    // the write width (one task per rewritten slice — the round-14 fix,
-    // see [[writePartitioned]]; a threshold-scoped pass stays exactly as
-    // wide as its selection), the kept set for the emptied-partition drop
-    // and the row total the re-grid decision reads
-    val counts = snap0.groupBy(col(partCol)).count().collect()
-    val grown = regrid.map(r => r -> r.width(counts.map(_.getLong(1)).sum))
+    // the materializing job observes the snapshot's row total (the
+    // re-grid decision) and its distinct slices — the kept set for the
+    // emptied-partition drop and the write width (one task per rewritten
+    // slice — the round-14 fix, see [[writePartitioned]]; a
+    // threshold-scoped pass stays exactly as wide as its selection) — no
+    // job of its own
+    val (snap0, seen) = graft.functions.Materialize.observed(
+      transform(t).select(t0.columns.toIndexedSeq.map(col): _*),
+      count(lit(1)).as("rows"), collect_set(col(partCol)).as("parts"))
+    val kept = seen("parts").asInstanceOf[scala.collection.Seq[Any]]
+      .map(_.toString).toSet
+    val grown = regrid.map(r => r -> r.width(seen("rows").asInstanceOf[Long]))
       .filter { case (_, parts) => parts > partsOf(spark, table) }
     CrashPoints.reached("pcompact.snapshotted")
     grown match {
@@ -377,9 +389,27 @@ object Bucketed {
         })
       case None =>
         rewriteInPlace(spark, table, partCol,
-          snap0.repartition(counts.length.max(1), col(partCol)),
-          counts.map(_.get(0).toString).toSet, only)
+          snap0.repartition(kept.size.max(1), col(partCol)), kept, only)
     }
+  }
+
+  /** Targeted compaction DRIVER — the piece that turns
+    * [[compactPartitioned]] into a standing maintenance policy: read
+    * `table`'s [[partitionedCompactionPlan]], rewrite exactly the slices
+    * whose file count exceeds `threshold` in ONE scoped pass (each its own
+    * task; unselected slices are not even opened), and return the plan it
+    * acted on as (part, n_files, needs_compaction). The plan is collected
+    * BEFORE acting on it — its `_metadata` scan is lazy and would re-list
+    * the rewritten layout. */
+  def compactOverThreshold(spark: SparkSession, table: String,
+      partCol: String, threshold: Int,
+      transform: DataFrame => DataFrame): Seq[(Long, Long, Boolean)] = {
+    val plan = partitionedCompactionPlan(spark, table, partCol, threshold)
+      .collect().toSeq.map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+    val over = plan.collect { case (part, _, true) => part }
+    if (over.nonEmpty)
+      compactPartitioned(spark, table, partCol, transform, only = Some(over))
+    plan
   }
 
   private def rewriteInPlace(spark: SparkSession, table: String,

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -26,14 +25,14 @@ object AnnGraphIndexStream {
 
   case class VecArrival(vec_id: Long, v: Seq[Double])
 
-  /** One micro-batch: insert-by-search, append both directions, mark. */
+  /** One micro-batch: insert-by-search, append both directions, mark (the
+    * batch marker in `markerDir` — [[CommitLog]]). */
   def processBatch(spark: SparkSession, name: String, batch: DataFrame,
       batchId: Long, markerDir: String): Unit = {
-    val markerPath = new Path(s"$markerDir/b=$batchId")
-    val fs = markerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(markerPath)) return
+    val log = new CommitLog(spark, markerDir)
+    if (log.committed(batchId)) return
     AnnGraphIndex.extend(batch.select(col("vec_id"), col("v")), name)
-    fs.create(markerPath, true).close()
+    log.commit(batchId)
   }
 
   /** The standing query: wire to `.option("checkpointLocation", …).start()`. */

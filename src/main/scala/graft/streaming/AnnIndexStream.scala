@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -25,12 +24,13 @@ object AnnIndexStream {
 
   case class VecArrival(vec_id: Long, v: Seq[Double])
 
-  /** One micro-batch: assign with the stored quantizer, append, mark.
+  /** One micro-batch: assign with the stored quantizer, append, mark
+    * (the batch marker in `markerDir` — [[CommitLog]]).
     *
     * `compactEvery` > 0 folds the maintenance loop's OTHER half in: every
     * Nth batch, after its extend commits, the cells THIS batch touched are
-    * [[AnnIndex.compact]]ed back to one file each (dynamic partition
-    * overwrite — untouched cells never rewritten), so a standing stream
+    * [[AnnIndex.compact]]ed back to one file each (an in-layout rewrite of
+    * exactly those cells — untouched cells never rewritten), so a standing stream
     * cannot accrete the N-files-per-probe small-file pathology
     * indefinitely. The touched-cid list is a driver-side collect of a
     * batch-sized DISTINCT — a handful of ints by construction, the same
@@ -52,12 +52,11 @@ object AnnIndexStream {
   def processBatch(spark: SparkSession, name: String, batch: DataFrame,
       batchId: Long, markerDir: String, compactEvery: Int = 0,
       targetedEvery: Int = 0, fileThreshold: Int = 4): Unit = {
-    val markerPath = new Path(s"$markerDir/b=$batchId")
-    val fs = markerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(markerPath)) return
+    val log = new CommitLog(spark, markerDir)
+    if (log.committed(batchId)) return
     val vecs = batch.select(col("vec_id"), col("v"))
     AnnIndex.extend(vecs, name)
-    fs.create(markerPath, true).close()
+    log.commit(batchId)
     val touchedDue = compactEvery > 0 && (batchId + 1) % compactEvery == 0
     if (touchedDue) {
       val touched = graft.analytics.Similarity

@@ -18,9 +18,10 @@ import graft.functions.Materialize
   *  - survivors land at `survivorsDir/b=<batchId>` in overwrite mode — a
   *    replayed batch rewrites the same directory (idempotent);
   *  - the index [[DedupIndex.extend]] is guarded by a batchId marker file
-  *    written AFTER the append: a batch that committed fully is skipped on
-  *    replay. A crash between append and marker can duplicate index rows
-  *    (at-least-once extend) — harmless by construction: candidates are
+  *    ([[CommitLog]]) written AFTER the append: a batch that committed
+  *    fully is skipped on replay. A crash between append and marker can
+  *    duplicate index rows (at-least-once extend) — harmless by
+  *    construction: candidates are
   *    distinct pairs and [[DedupIndex.nearDupsAgainst]] distincts its
   *    verified output, so duplicated rows never duplicate matches. The
   *    dangerous twin of that window — the batch's OWN survivors already
@@ -76,12 +77,12 @@ object DedupIndexStream {
       batchId: Long, survivorsDir: String, estThreshold: Double = -1.0,
       compactEvery: Int = 0, targetedEvery: Int = 0,
       fileThreshold: Int = 4): Unit = {
-    val markerPath = new Path(s"$survivorsDir/_committed/b=$batchId")
-    val fs = markerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(markerPath)) return // fully committed — replay is a no-op
-    val batchDir = s"$survivorsDir/b=$batchId"
+    val log = new CommitLog(spark, s"$survivorsDir/_committed")
+    if (log.committed(batchId)) return // fully committed — replay is a no-op
+    val batchDir = new Path(s"$survivorsDir/b=$batchId")
     val survivors =
-      if (fs.exists(new Path(batchDir, "_SUCCESS"))) {
+      if (batchDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .exists(new Path(batchDir, "_SUCCESS"))) {
         // Replay of a crash between the survivor write and the marker: the
         // first run's survivor set is already durable — reuse it VERBATIM
         // and redo only the extend (duplicate index rows from a replayed
@@ -96,7 +97,7 @@ object DedupIndexStream {
         // so its own half-committed rows can't self-match; a later-batch
         // redelivery takes the fresh path below and correctly matches its
         // earlier copy.
-        spark.read.parquet(batchDir)
+        spark.read.parquet(batchDir.toString)
       } else {
         // intra-batch exact dedup: keep min doc_id per content digest
         val w = org.apache.spark.sql.expressions.Window
@@ -107,11 +108,11 @@ object DedupIndexStream {
         val matched = DedupIndex.nearDupsAgainst(spark, name, uniq, estThreshold)
           .select(col("new_id").as("doc_id")).distinct()
         val s = Materialize(uniq.join(matched, Seq("doc_id"), "left_anti"))
-        s.write.mode("overwrite").parquet(batchDir)
+        s.write.mode("overwrite").parquet(batchDir.toString)
         s
       }
     DedupIndex.extend(survivors, name)
-    fs.create(markerPath, true).close()
+    log.commit(batchId)
     val fullDue = compactEvery > 0 && (batchId + 1) % compactEvery == 0
     if (fullDue) DedupIndex.compact(spark, name)
     else if (targetedEvery > 0 && (batchId + 1) % targetedEvery == 0)

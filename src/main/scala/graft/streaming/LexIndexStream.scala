@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.analytics.LexIndex
@@ -21,7 +20,8 @@ import graft.analytics.LexIndex
   *  1. the batch snapshots to `workDir/stage/b=<id>` in overwrite mode —
   *     a deterministic re-writable staging copy, so every replay derives
   *     byte-identical postings/lengths/stats from the SAME rows;
-  *  2. each table append is guarded by its OWN marker written after it —
+  *  2. each table append is guarded by its OWN step marker written after
+  *     it ([[CommitLog.step]]) —
   *     a crash between appends resumes at the first un-markered table,
   *     re-deriving from the stage, never re-appending a committed one;
   *  3. a final batch marker short-circuits fully-committed replays.
@@ -35,20 +35,15 @@ object LexIndexStream {
   /** One micro-batch — exposed for direct testing. */
   def processBatch(spark: SparkSession, name: String, batch: DataFrame,
       batchId: Long, workDir: String, compactEvery: Int = 0): Unit = {
-    val fs = new Path(workDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = new Path(s"$workDir/_committed/b=$batchId")
-    if (fs.exists(done)) return
+    val log = new CommitLog(spark, s"$workDir/_committed")
+    if (log.committed(batchId)) return
     val stage = s"$workDir/stage/b=$batchId"
     batch.select("doc_id", "text").write.mode("overwrite").parquet(stage)
     val staged = spark.read.parquet(stage)
-    def guarded(step: String)(f: => Unit): Unit = {
-      val m = new Path(s"$workDir/_committed/b=$batchId.$step")
-      if (!fs.exists(m)) { f; fs.create(m, true).close() }
-    }
-    guarded("postings") { LexIndex.appendPostings(staged, name) }
-    guarded("dl") { LexIndex.appendDl(staged, name) }
-    guarded("stats") { LexIndex.appendStatsDelta(staged, name) }
-    fs.create(done, true).close()
+    log.step(batchId, "postings") { LexIndex.appendPostings(staged, name) }
+    log.step(batchId, "dl") { LexIndex.appendDl(staged, name) }
+    log.step(batchId, "stats") { LexIndex.appendStatsDelta(staged, name) }
+    log.commit(batchId)
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
       LexIndex.compact(spark, name)
   }

@@ -19,11 +19,13 @@ import graft.analytics.{AnnGraphIndex, AnnIndex, DedupIndex, LexIndex}
   *    the delta log with the tombstone log rather than deriving a delta
   *    from the request, so any crash prefix — ids appended but stats not
   *    yet corrected — heals on the next batch, to exact Long totals;
-  *  - the purges are answer-preserving rewrites (the compaction family's
-  *    contract), safe to re-run.
-  * Contrast the extend loops (LexIndexStream's per-table markers,
-  * DedupIndexStream's batch marker): extends ADD information that a replay
-  * would double; deletes only move logs toward a fixed point.
+  *  - the purges are answer-preserving rewrites through the shared
+  *    `graft.sink.Bucketed` compactions (the ANN purge rewrites exactly
+  *    the cells holding deleted vectors, and drops a cell it empties),
+  *    safe to re-run.
+  * Contrast the extend loops (their [[CommitLog]] markers): extends ADD
+  * information that a replay would double; deletes only move logs toward
+  * a fixed point.
   *
   * The ANN leg takes vector ids; the caller maps doc deletions to vector
   * deletions with whatever id discipline links the two tables (here:

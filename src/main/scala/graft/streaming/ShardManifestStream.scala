@@ -38,19 +38,8 @@ object ShardManifestStream {
   /** Latest committed manifest version with id < beforeBatch (empty when
     * none) — replay safety: a batch never reads its own partial output. */
   def latestManifest(spark: SparkSession, manifestDir: String,
-      beforeBatch: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(manifestDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val versions =
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("v="))
-        .map(_.stripPrefix("v=").toLong)
-        .filter(_ < beforeBatch)
-    if (versions.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ManifestSchema)
-    else spark.read.schema(ManifestSchema).parquet(s"$manifestDir/v=${versions.max}")
-  }
+      beforeBatch: Long): DataFrame =
+    ViewMaintenance.latestVersion(spark, manifestDir, beforeBatch, ManifestSchema)
 
   /** Merge a batch of (doc_id, text) documents into the stored manifest:
     * the batch's own q186 aggregate, full-outer summed per shard. */

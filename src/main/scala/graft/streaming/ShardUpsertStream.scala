@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -17,7 +16,7 @@ import graft.functions.Materialize
   * Idempotence: unlike the retention loop (whose applies all converge on
   * replay), the APPEND leg here adds rows — a replayed batch would
   * duplicate every incoming document. So this loop uses the extend-loop
-  * discipline (LexIndexStream's): a batchId commit marker written AFTER
+  * discipline ([[CommitLog]]): a batchId commit marker written AFTER
   * the apply makes a fully-committed batch's replay a no-op. The remaining
   * crash window (apply done, marker not) is closed by the apply itself
   * being a two-leg idempotent-ENOUGH sequence under one retry: the delete
@@ -44,9 +43,8 @@ object ShardUpsertStream {
   def processBatch(spark: SparkSession, table: String,
       batch: Dataset[DocChange], batchId: Long, stateDir: String,
       nShards: Int = 16): Unit = {
-    val marker = new Path(s"$stateDir/_committed/b=$batchId")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) return // fully committed — replay is a no-op
+    val log = new CommitLog(spark, s"$stateDir/_committed")
+    if (log.committed(batchId)) return // fully committed — replay is a no-op
     val b = Materialize(batch.toDF())
     val incoming = b.filter(!col("deleted"))
       .select(col("doc_id"), col("text"),
@@ -60,8 +58,7 @@ object ShardUpsertStream {
       .join(broadcast(ids), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("shard_id")).distinct())
     Sampling.upsertShards(spark, table, gone, incoming)
-    fs.mkdirs(marker.getParent)
-    fs.create(marker, true).close()
+    log.commit(batchId)
   }
 
   /** The standing query: wire to `.option("checkpointLocation", …).start()`.

@@ -37,19 +37,25 @@ object ViewMaintenance {
   /** Latest committed view version with id < beforeBatch (empty frame when
     * none) — replay safety: the in-flight batch never reads its own
     * partial output. */
-  def latestView(spark: SparkSession, viewDir: String, beforeBatch: Long): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(viewDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def latestView(spark: SparkSession, viewDir: String, beforeBatch: Long): DataFrame =
+    latestVersion(spark, viewDir, beforeBatch, ViewSchema)
+
+  /** The batchId-versioned read every maintained view here shares: the
+    * newest `dir/v=<batch>` with batch < `beforeBatch`, read at `schema`
+    * (an empty frame of `schema` when there is none). */
+  private[streaming] def latestVersion(spark: SparkSession, dir: String,
+      beforeBatch: Long, schema: StructType): DataFrame = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val versions =
-      if (!fs.exists(new org.apache.hadoop.fs.Path(viewDir))) Seq.empty
-      else fs.listStatus(new org.apache.hadoop.fs.Path(viewDir)).toSeq
-        .map(_.getPath.getName)
+      if (!fs.exists(p)) Seq.empty
+      else fs.listStatus(p).toSeq.map(_.getPath.getName)
         .filter(_.startsWith("v="))
         .map(_.stripPrefix("v=").toLong)
         .filter(_ < beforeBatch)
     if (versions.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ViewSchema)
-    else spark.read.schema(ViewSchema).parquet(s"$viewDir/v=${versions.max}")
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.schema(schema).parquet(s"$dir/v=${versions.max}")
   }
 
   /** The q137 signed merge as a pure frame transform: `prev` is the stored

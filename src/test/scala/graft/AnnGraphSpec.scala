@@ -227,6 +227,27 @@ class AnnGraphSpec extends SparkSpec {
       "marker-guarded replay appended again")
   }
 
+  /** Spark jobs of one standing AnnGraphIndexStream batch of ten vectors
+    * on a default-built index. The stored vector count's batch size rides
+    * the job that materializes the batch (16 when it was a `count`, two
+    * jobs under AQE). */
+  private val StreamBatchJobs = 14
+
+  test("job-count pin: one standing stream batch on a default-built index") {
+    import spark.implicits._
+    import graft.streaming.AnnGraphIndexStream
+    val name = "spec_graph_jobs"
+    AnnGraphIndex.build(vecs, name)
+    val fresh = vecs.filter(col("vec_id") < 10).collect()
+      .map(r => (r.getLong(0) + 3000000L, r.getSeq[Double](1).map(_ * 2.0)))
+      .toSeq.toDF("vec_id", "v").localCheckpoint()
+    val jobs = JobCount.of(spark)(AnnGraphIndexStream.processBatch(spark, name,
+      fresh, 0L, java.nio.file.Files.createTempDirectory("graph_jobs").toString))
+    info(s"jobs per standing batch: $jobs")
+    assert(jobs == StreamBatchJobs,
+      s"one standing batch ran $jobs jobs (pinned $StreamBatchJobs)")
+  }
+
   test("refresh: rebuild from current vectors honors deletions; degree re-normalizes; serving intact") {
     val name = "spec_graph_idx_refresh"
     val q = vecs.filter(col("vec_id") < 5)

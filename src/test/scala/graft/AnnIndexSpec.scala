@@ -168,6 +168,29 @@ class AnnIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       s"self-duplicate lookup through the auto-compacted index: ${top.mkString}")
   }
 
+  /** Spark jobs of one standing batch of ten vectors with its touched-cell
+    * compaction (`compactEvery = 1`), on a 16-centroid index: the same 10
+    * the hand-written cells compaction ran, now that the shared
+    * `Bucketed.compactPartitioned` observes its slice set inside the
+    * snapshot job instead of counting it in two more. */
+  private val StreamBatchJobs = 10
+
+  test("job-count pin: one standing batch with its touched-cell compaction") {
+    import spark.implicits._
+    import graft.streaming.AnnIndexStream
+    val name = "spec_ann_jobs"
+    AnnIndex.build(vecs.filter(col("vec_id") % 2 === 0), name, numCentroids = 16)
+    val fresh = vecs.filter(col("vec_id") % 2 === 1).limit(10).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq.toDF("vec_id", "v")
+      .localCheckpoint()
+    val jobs = JobCount.of(spark)(AnnIndexStream.processBatch(spark, name,
+      fresh, 0L, java.nio.file.Files.createTempDirectory("ann_jobs").toString,
+      compactEvery = 1))
+    info(s"jobs per standing batch: $jobs")
+    assert(jobs == StreamBatchJobs,
+      s"one standing batch ran $jobs jobs (pinned $StreamBatchJobs)")
+  }
+
   test("streaming targeted cadence: threshold mode rewrites only accreted cells; answers preserved") {
     import spark.implicits._
     import graft.streaming.AnnIndexStream

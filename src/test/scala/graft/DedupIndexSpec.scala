@@ -9,8 +9,10 @@ import graft.analytics.{Dedup, DedupIndex, Sampling}
 class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** Spark jobs of one DedupIndexStream batch (probe, survivor write,
-    * extend, full compaction) on a one-slice index. */
-  private val DedupBatchJobs = 25
+    * extend, full compaction) on a one-slice index. The `_bands` rewrite's
+    * slice set and row total are observed by its snapshot job
+    * (`Materialize.observed`), not by a count of their own (25 before). */
+  private val DedupBatchJobs = 23
 
   private def docs = Tables.documents(spark, sf("sf0.01"))
     .select(col("doc_id"), col("text"),

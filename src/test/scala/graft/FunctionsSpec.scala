@@ -97,6 +97,13 @@ class FunctionsSpec extends SparkSpec {
     try {
       val out = Materialize(df)
       assert(out.count() == 100)
+      // aggregates observed by the materializing job hold in this mode too
+      // (a partitioned compaction's kept-slice set rides them)
+      import org.apache.spark.sql.functions.{col, collect_set, count, lit}
+      val (_, seen) = Materialize.observed(df, count(lit(1)).as("n"),
+        collect_set(col("id") % 3).as("s"))
+      assert(seen("n") == 100L &&
+        seen("s").asInstanceOf[scala.collection.Seq[Any]].toSet == Set(0L, 1L, 2L))
       assert(spark.sparkContext.getCheckpointDir.exists(_.contains("graft_ckpt")),
         "reliable checkpoint dir must be installed")
       // checkpoint files actually landed on (simulated) durable storage

@@ -98,6 +98,12 @@ class KernelSpec extends SparkSpec {
   test("the table covers every kernel, and SQL registers every kernel") {
     assert(table.map(_._1).toSet == Kernels.all.map(_.name).toSet)
     assert(Kernels.all.map(_.name).toSet.subsetOf(GraftExtensions.registrations.map(_._1).toSet))
+    // each SQL function names the class that implements it, not one shared owner
+    assert(GraftExtensions.registrations.map(r => r._1 -> r._2).toMap ==
+      (Kernels.all.map(k => k.name -> k.owner.getName.stripSuffix("$")) ++ Seq(
+        "kmv_sketch" -> "graft.functions.KmvSketch$KmvSketchAgg",
+        "kmv_merge" -> "graft.functions.KmvSketch$KmvMergeAgg",
+        "graft_quantile_sketch" -> "graft.functions.QuantileSketch$QuantileSketchAgg")).toMap)
   }
 
   test("plans and output columns carry the SQL name; constants stay out of both") {

@@ -169,6 +169,40 @@ class RetentionSpec extends SparkSpec {
     assert(top() == mor, "purge changed an answer")
   }
 
+  test("ann index: a purge that empties a cell drops its partition; no purged vector comes back") {
+    val name = "spec_ret_ann_cell"
+    val vecs = Tables.embeddings(spark, sf("sf0.01"))
+      .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+    AnnIndex.build(vecs, name, numCentroids = 8)
+    val cells = spark.table(s"${name}_cells")
+    val cid = cells.groupBy(col("cid")).count()
+      .orderBy(col("count"), col("cid")).first().getLong(0)
+    val gone = cells.filter(col("cid") === cid).select(col("vec_id"), col("v"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
+    val goneIds = gone.map(_._1).toSet
+    import spark.implicits._
+    AnnIndex.delete(goneIds.toSeq.toDF("vec_id"), name)
+    // each deleted vector, asked under a fresh id, probes its own cell first
+    val asked = gone.toSeq.map { case (id, v) => (id + 5000000L, v) }
+      .toDF("query_id", "qv")
+    def served(): Set[Long] = AnnIndex.topKAgainst(spark, name, asked, k = 5)
+      .select(col("neighbor_id")).collect().map(_.getLong(0)).toSet
+    assert(served().nonEmpty && served().intersect(goneIds).isEmpty,
+      "merge-on-read served a deleted vector")
+
+    AnnIndex.purgeTombstones(spark, name)
+    assert(!spark.catalog.tableExists(Tombstones.tableOf(name)),
+      "tombstone log survived the purge")
+    val ti = org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_cells")
+    val cat = spark.sessionState.catalog
+    assert(!cat.listPartitions(ti).exists(_.spec("cid") == cid.toString),
+      s"the emptied cell $cid is still a catalog partition")
+    assert(!new java.io.File(new java.io.File(cat.getTableMetadata(ti).location),
+      s"cid=$cid").exists(), s"the emptied cell $cid is still on disk")
+    assert(served().intersect(goneIds).isEmpty,
+      "a purged vector came back once the log reset")
+  }
+
   test("plan: merge-on-read tombstone filters are broadcast anti-joins, never shuffles") {
     val name = "spec_ret_plan"
     DedupIndex.build(docs.filter(col("cb") >= 10).select("doc_id", "text"), name, buckets = 4)
