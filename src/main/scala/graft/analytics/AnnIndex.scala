@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables.embeddings
@@ -277,11 +277,15 @@ object AnnIndex {
     plantFound(q, top)
   }
 
-  /** Append new vectors, assigned with the stored quantizer. The select
-    * follows the cells table's own column order (payload columns ride
-    * along; cid last); payload columns the batch doesn't carry append as
-    * typed nulls — parquet's ordinary missing-column semantics. */
-  def extend(vecs: DataFrame, name: String): Unit = {
+  /** Append new vectors, assigned with the stored quantizer, and return
+    * the cells the batch landed in — observed inside the append job
+    * (`collect_set(cid)`, at most one entry per centroid), so a caller
+    * that compacts those cells (AnnIndexStream) needs no pass of its own
+    * over the batch. The select follows the cells table's own column order
+    * (payload columns ride along; cid last); payload columns the batch
+    * doesn't carry append as typed nulls — parquet's ordinary
+    * missing-column semantics. */
+  def extend(vecs: DataFrame, name: String): Seq[Long] = {
     val spark = vecs.sparkSession
     val cells = spark.table(s"${name}_cells")
     val assigned = Similarity.assignCellsOn(vecs, spark.table(s"${name}_centroids"))
@@ -289,9 +293,12 @@ object AnnIndex {
       if (df.columns.contains(f.name)) df
       else df.withColumn(f.name, lit(null).cast(f.dataType))
     }
+    val touched = Observation()
     filled.select(cells.columns.toIndexedSeq.map(col): _*)
+      .observe(touched, collect_set(col("cid")).as("cids"))
       .write.mode("append").format("parquet").partitionBy("cid")
       .saveAsTable(s"${name}_cells")
+    touched.get("cids").asInstanceOf[Seq[Long]]
   }
 
   /** Top-k cosine neighbors of (query_id, qv) queries against the index:

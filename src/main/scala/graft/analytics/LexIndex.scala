@@ -306,60 +306,46 @@ object LexIndex {
   /** The index's tables: what a heal covers and a swap renames. */
   private val Suffixes = Seq("_postings", "_dl", "_stats")
 
-  /** The three table appends of one extend, individually callable so a
-    * streaming loop can guard EACH with its own commit marker: unlike the
-    * dedup index (where duplicate rows are harmless — pairs are
-    * distinct'd), duplicated postings here would inflate tf and df, so
-    * at-least-once appends are NOT acceptable and exactly-once must be
-    * assembled per table (see LexIndexStream). */
-  private[graft] def appendPostings(docs: DataFrame, name: String): Unit =
-    Bucketed.appendBucketed(postingsOf(docs), s"${name}_postings", "term")
-
-  private[graft] def appendDl(docs: DataFrame, name: String): Unit =
-    Bucketed.appendBucketed(dlOf(docs), s"${name}_dl", "doc_id")
-
-  private[graft] def appendStatsDelta(docs: DataFrame, name: String): Unit =
-    appendStats(dlOf(docs), name)
-
-  /** One stats delta row summarizing a (doc_id, dl) frame. */
-  private def appendStats(dl: DataFrame, name: String): Unit =
-    dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
-      .write.mode("append").format("parquet").saveAsTable(s"${name}_stats")
-
   /** Append a batch of NEW documents into the existing layout — ONE
-    * tokenize pass over the batch (the old shape tokenized it three
-    * times: postings, dl, stats delta); dl and the delta derive from the
-    * materialized postings ([[dlFromPostings]]).
+    * tokenize pass over the batch: postings materialize once, dl derives
+    * from them ([[dlFromPostings]]), and the stats delta row is the
+    * (count, Σdl) observed inside dl's materializing job. Every value is
+    * derived BEFORE the first table is touched, so the appends only write.
     *
     * The appends fan on two driver threads: the postings append runs
-    * beside the dl→stats chain. Within that chain dl still lands before
+    * beside the dl→stats chain, and within that chain dl lands before
     * stats, so the delta log never runs ahead of the doc lengths it
-    * summarizes. Across the fan there is no order: a crash can leave dl
-    * and stats durable with the postings append torn — a torn state the
-    * old sequential order (postings, dl, stats) did not have. Re-running
-    * this verb does not heal it (it is not idempotent: a re-run appends
-    * dl, stats and any landed postings a second time); the marker-guarded
-    * streaming twin (LexIndexStream) is the exactly-once path — it keeps
-    * the standalone append verbs, each replayable against its own marker.
-    * An idempotent batch extend (a commit log shared with the streaming
-    * loops) is not built yet. */
-  def extend(docs: DataFrame, name: String): Unit = {
+    * summarizes. Each of the three appends (`postings`, `dl`, `stats`)
+    * runs inside `step(<table>)`. The default runs it unguarded — a
+    * one-shot extend, whose crash is recovered by rebuilding. A caller
+    * that must land each append exactly once passes a commit-log step
+    * (LexIndexStream passes [[graft.streaming.CommitLog.step]]): a re-run
+    * over the same `docs` then skips every table already marked and
+    * re-derives the same rows and totals for the rest, so any torn state
+    * of the fan — dl and stats durable with postings not, or the reverse —
+    * converges to one append of each. */
+  def extend(docs: DataFrame, name: String,
+      step: String => (=> Unit) => Unit = _ => body => body): Unit = {
     val spark = docs.sparkSession
+    import spark.implicits._
     healedTables(spark, name)
     val postings = Materialize(postingsOf(docs.select(col("doc_id"), col("text"))))
-    val dl = Materialize(dlFromPostings(postings))
-    // the postings append and the dl→stats chain write DISJOINT tables —
-    // fan them (guide §2.6, the buildFrom discipline). Both inputs are
-    // checkpoints, so neither leg recomputes the tokenize; stats stays
-    // strictly AFTER dl on its leg (the delta log must never run ahead of
-    // the doc lengths it summarizes — same order as before). The
-    // exactly-once streaming twin (LexIndexStream) guards each append
-    // with its own marker and is unaffected.
+    val (dl, totals) = Materialize.observed(dlFromPostings(postings),
+      count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
+    val delta = Seq((totals("n_docs").asInstanceOf[Long],
+      Option(totals("sum_dl")).map(_.asInstanceOf[Long]))).toDF("n_docs", "sum_dl")
+    // the named point opens a bucketed append BEFORE it writes: an armed
+    // one tears the fan with that table un-landed (the torn-extend specs)
+    def append(sfx: String, rows: DataFrame, key: String): Unit = step(sfx) {
+      graft.sink.CrashPoints.reached(s"lex.extend.$sfx")
+      Bucketed.appendBucketed(rows, s"${name}_$sfx", key)
+    }
     graft.functions.Par.inParallel(Seq(
-      () => Bucketed.appendBucketed(postings, s"${name}_postings", "term"),
+      () => append("postings", postings, "term"),
       () => {
-        Bucketed.appendBucketed(dl, s"${name}_dl", "doc_id")
-        appendStats(dl, name)
+        append("dl", dl, "doc_id")
+        step("stats")(delta.write.mode("append").format("parquet")
+          .saveAsTable(s"${name}_stats"))
       }))
   }
 

@@ -62,7 +62,9 @@ object CrashPoints {
 
   /** Throw at the FIRST occurrence of the NAMED point on this thread tree
     * (and only it) — targeted fault injection for fanned verbs where the
-    * budget sweep's count ordering is nondeterministic across legs. */
+    * budget sweep's count ordering is nondeterministic across legs. A
+    * point reached BEFORE a leg writes (LexIndex.extend's
+    * `lex.extend.<table>`) tears that leg with its table un-landed. */
   private[graft] def armAt(point: String): Unit = { ensure().at = point }
 
   /** Back to production behavior for this thread (counter keeps counting,

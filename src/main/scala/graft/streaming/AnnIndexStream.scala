@@ -24,20 +24,20 @@ object AnnIndexStream {
 
   case class VecArrival(vec_id: Long, v: Seq[Double])
 
-  /** One micro-batch: assign with the stored quantizer, append, mark
-    * (the batch marker in `markerDir` — [[CommitLog]]).
+  /** One micro-batch: [[AnnIndex.extend]] (assign with the stored
+    * quantizer, append, report the touched cells), then mark (the batch
+    * marker in `markerDir` — [[CommitLog]]).
     *
     * `compactEvery` > 0 folds the maintenance loop's OTHER half in: every
     * Nth batch, after its extend commits, the cells THIS batch touched are
     * [[AnnIndex.compact]]ed back to one file each (an in-layout rewrite of
     * exactly those cells — untouched cells never rewritten), so a standing stream
     * cannot accrete the N-files-per-probe small-file pathology
-    * indefinitely. The touched-cid list is a driver-side collect of a
-    * batch-sized DISTINCT — a handful of ints by construction, the same
-    * order of driver state as the batchId itself. Compaction carries no
-    * marker of its own: it is answer-preserving and idempotent, so a
-    * crash-replay that re-compacts is harmless (the extend marker still
-    * guards the state-changing append).
+    * indefinitely. The touched cells are the set [[AnnIndex.extend]]
+    * observed inside its append job — at most one id per centroid.
+    * Compaction carries no marker of its own: it is answer-preserving and
+    * idempotent, so a crash-replay that re-compacts is harmless (the
+    * extend marker still guards the state-changing append).
     *
     * `targetedEvery` > 0 instead drives the cadence by MEASURED layout
     * ([[AnnIndex.compactOverThreshold]] at `fileThreshold` files/cell,
@@ -54,15 +54,10 @@ object AnnIndexStream {
       targetedEvery: Int = 0, fileThreshold: Int = 4): Unit = {
     val log = new CommitLog(spark, markerDir)
     if (log.committed(batchId)) return
-    val vecs = batch.select(col("vec_id"), col("v"))
-    AnnIndex.extend(vecs, name)
+    val touched = AnnIndex.extend(batch.select(col("vec_id"), col("v")), name)
     log.commit(batchId)
-    val touchedDue = compactEvery > 0 && (batchId + 1) % compactEvery == 0
-    if (touchedDue) {
-      val touched = graft.analytics.Similarity
-        .assignCellsOn(vecs, spark.table(s"${name}_centroids"))
-        .select(col("cid")).distinct().collect().map(_.getLong(0))
-      if (touched.nonEmpty) AnnIndex.compact(spark, name, Some(touched.toSeq))
+    if (compactEvery > 0 && (batchId + 1) % compactEvery == 0) {
+      if (touched.nonEmpty) AnnIndex.compact(spark, name, Some(touched))
     } else if (targetedEvery > 0 && (batchId + 1) % targetedEvery == 0)
       AnnIndex.compactOverThreshold(spark, name, fileThreshold)
   }

@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   * [[ShardUpsertStream]]): an empty file `dir/b=<batchId>` written AFTER a
   * micro-batch's state-changing work makes a replay of that batch a no-op,
   * and `dir/b=<batchId>.<step>` guards one step of a batch that must land
-  * each of its appends exactly once (LexIndexStream's three tables). A
+  * each of its appends exactly once (LexIndexStream passes [[step]] as the
+  * guard of [[graft.analytics.LexIndex.extend]]'s three appends). A
   * crash between the work and its marker replays the work, so each caller
   * states what a replayed step costs it. */
 final class CommitLog(spark: SparkSession, dir: String) {

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.analytics.LexIndex
@@ -14,17 +15,18 @@ import graft.analytics.LexIndex
   * tolerates at-least-once appends (duplicate rows can't duplicate its
   * distinct'd output pairs), but duplicated postings inflate tf, df, and
   * the stats totals — silently wrong BM25 scores. So a replayed batch must
-  * append to each of the three tables exactly once, assembled from
-  * idempotent parts:
+  * append to each of the three tables exactly once:
   *
   *  1. the batch snapshots to `workDir/stage/b=<id>` in overwrite mode —
   *     a deterministic re-writable staging copy, so every replay derives
-  *     byte-identical postings/lengths/stats from the SAME rows;
-  *  2. each table append is guarded by its OWN step marker written after
-  *     it ([[CommitLog.step]]) —
-  *     a crash between appends resumes at the first un-markered table,
-  *     re-deriving from the stage, never re-appending a committed one;
-  *  3. a final batch marker short-circuits fully-committed replays.
+  *     the same postings, lengths and stats totals from the SAME rows;
+  *  2. one [[LexIndex.extend]] over the stage, each of its three appends
+  *     guarded by its own step marker ([[CommitLog.step]]) — a crash
+  *     anywhere in the extend resumes at the un-markered tables, never
+  *     re-appending a committed one;
+  *  3. a final batch marker short-circuits fully-committed replays, and the
+  *     stage is deleted after it lands (a crash between the two leaves one
+  *     orphaned stage directory, which nothing reads).
   *
   * `compactEvery` > 0 runs [[LexIndex.compact]] after every Nth batch —
   * answer-preserving and idempotent, so it carries no marker. */
@@ -37,13 +39,11 @@ object LexIndexStream {
       batchId: Long, workDir: String, compactEvery: Int = 0): Unit = {
     val log = new CommitLog(spark, s"$workDir/_committed")
     if (log.committed(batchId)) return
-    val stage = s"$workDir/stage/b=$batchId"
-    batch.select("doc_id", "text").write.mode("overwrite").parquet(stage)
-    val staged = spark.read.parquet(stage)
-    log.step(batchId, "postings") { LexIndex.appendPostings(staged, name) }
-    log.step(batchId, "dl") { LexIndex.appendDl(staged, name) }
-    log.step(batchId, "stats") { LexIndex.appendStatsDelta(staged, name) }
+    val stage = new Path(s"$workDir/stage/b=$batchId")
+    batch.select("doc_id", "text").write.mode("overwrite").parquet(stage.toString)
+    LexIndex.extend(spark.read.parquet(stage.toString), name, log.step(batchId, _))
     log.commit(batchId)
+    stage.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(stage, true)
     if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
       LexIndex.compact(spark, name)
   }

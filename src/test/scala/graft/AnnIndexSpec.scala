@@ -169,11 +169,9 @@ class AnnIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   /** Spark jobs of one standing batch of ten vectors with its touched-cell
-    * compaction (`compactEvery = 1`), on a 16-centroid index: the same 10
-    * the hand-written cells compaction ran, now that the shared
-    * `Bucketed.compactPartitioned` observes its slice set inside the
-    * snapshot job instead of counting it in two more. */
-  private val StreamBatchJobs = 10
+    * compaction (`compactEvery = 1`), on a 16-centroid index: the touched
+    * cells are observed inside the extend's append job. */
+  private val StreamBatchJobs = 6
 
   test("job-count pin: one standing batch with its touched-cell compaction") {
     import spark.implicits._
@@ -189,6 +187,31 @@ class AnnIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     info(s"jobs per standing batch: $jobs")
     assert(jobs == StreamBatchJobs,
       s"one standing batch ran $jobs jobs (pinned $StreamBatchJobs)")
+  }
+
+  test("extend reports the cells it appended into; an empty stream batch compacts none") {
+    import spark.implicits._
+    import graft.streaming.AnnIndexStream
+    val name = "spec_ann_touch"
+    AnnIndex.build(vecs.filter(col("vec_id") % 2 === 0), name, numCentroids = 16)
+    val fresh = vecs.filter(col("vec_id") % 2 === 1).limit(10).localCheckpoint()
+    val assigned = graft.analytics.Similarity
+      .assignCellsOn(fresh, spark.table(s"${name}_centroids"))
+      .select(col("cid")).distinct().collect().map(_.getLong(0)).toSet
+    assert(AnnIndex.extend(fresh, name).toSet == assigned)
+    def cellFiles(): Map[String, Set[String]] = {
+      val loc = new java.io.File(spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(s"${name}_cells")).location)
+      loc.listFiles().filter(_.getName.startsWith("cid="))
+        .map(d => d.getName -> d.listFiles().map(_.getName).toSet).toMap
+    }
+    val before = cellFiles()
+    val empty = Seq.empty[(Long, Seq[Double])].toDF("vec_id", "v")
+    assert(AnnIndex.extend(empty, name).isEmpty)
+    val tmp = java.nio.file.Files.createTempDirectory("ann_empty").toString
+    AnnIndexStream.processBatch(spark, name, empty, 0L, tmp, compactEvery = 1)
+    assert(cellFiles() == before, "an empty batch rewrote cells")
+    assert(new java.io.File(s"$tmp/b=0").exists, "the empty batch did not commit")
   }
 
   test("streaming targeted cadence: threshold mode rewrites only accreted cells; answers preserved") {

@@ -196,6 +196,31 @@ class CrashSweepSpec extends SparkSpec {
     }
   }
 
+  test("lex stream extend torn with dl and stats durable, postings not, converges on replay") {
+    import graft.streaming.LexIndexStream
+    val name = "swlx_idx"; val fresh = "swlxref"
+    val base = corpus.filter(col("cb") >= 25).select("doc_id", "text")
+    val batch = corpus.filter(col("cb") < 25).select("doc_id", "text")
+    LexIndex.build(corpus.select("doc_id", "text"), fresh, buckets = 2)
+    LexIndex.build(base, name, buckets = 2)
+    val work = java.nio.file.Files.createTempDirectory("swlx").toString
+    // one targeted case, not a prefix sweep: the postings leg dies before
+    // its append while the fail-slow fan lands the dl→stats chain
+    CrashPoints.armAt("lex.extend.postings")
+    try intercept[CrashInjected](
+      LexIndexStream.processBatch(spark, name, batch, 0L, work))
+    finally CrashPoints.disarm()
+    assert(statsTotals(name) == statsTotals(fresh), "dl and stats did not land")
+    assert(spark.table(s"${name}_postings").count() <
+      spark.table(s"${fresh}_postings").count(), "postings landed")
+    LexIndexStream.processBatch(spark, name, batch, 0L, work)
+    assert(statsTotals(name) == statsTotals(fresh),
+      s"stats drifted: ${statsTotals(name)} vs ${statsTotals(fresh)}")
+    assert(spark.table(s"${name}_postings").count() ==
+      spark.table(s"${fresh}_postings").count(), "postings not appended exactly once")
+    assert(bm25Set(name) == bm25Set(fresh), "served BM25 drifted")
+  }
+
   test("clustered extend (merge into the persisted cluster map) converges from EVERY crash prefix") {
     val name = "swcx_idx"; val ref = "swcxref"
     // small slices: the sweep replays build+extend once per prefix, so

@@ -13,9 +13,14 @@ class LexIndexSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(_.toSeq).toSet
 
-  /** Spark jobs of one LexIndexStream batch (three marker-guarded appends
-    * and a compaction) on a one-bucket index. */
+  /** Spark jobs of one LexIndexStream batch (the stage write, one
+    * marker-guarded extend and a compaction) on a one-bucket index. */
   private val LexBatchJobs = 20
+
+  /** Spark jobs of one batch [[LexIndex.extend]] of ten docs: postings and
+    * dl materialize once each (the stats row is observed in dl's job),
+    * then the two bucketed appends and the one-row stats append. */
+  private val LexExtendJobs = 9
 
   /** Spark jobs of a default-width build of the `cb ≥ 50` slice: the
     * postings count that sizes the width rides the materializing job. */
@@ -148,10 +153,19 @@ class LexIndexSpec extends SparkSpec {
       assert(widthOf(name + sfx) == 1 && nFiles(name + sfx) == 1,
         s"$sfx: ${nFiles(name + sfx)} files for ${widthOf(name + sfx)} buckets")
     }
+    val more = docs.filter(col("cb") < 20)
+      .select("doc_id", "text").limit(10).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.toDF("doc_id", "text")
+      .localCheckpoint()
+    val extendJobs = JobCount.of(spark)(LexIndex.extend(more, name))
+    info(s"jobs per batch extend: $extendJobs")
+    assert(extendJobs == LexExtendJobs,
+      s"one batch extend ran $extendJobs jobs (pinned $LexExtendJobs)")
   }
 
   test("streaming loop: batches extend the index exactly once, replay and partial commits heal") {
     import graft.streaming.LexIndexStream
+    import graft.sink.CrashPoints
     val all = docs.select("doc_id", "text")
     val a = all.filter(col("doc_id") % 3 === 0)
     val b = all.filter(col("doc_id") % 3 === 1)
@@ -161,19 +175,40 @@ class LexIndexSpec extends SparkSpec {
     LexIndexStream.processBatch(spark, "spec_lex_str", b, 0L, work)
     // full replay of a committed batch: must be a no-op
     LexIndexStream.processBatch(spark, "spec_lex_str", b, 0L, work)
-    // partial-commit crash: batch 1 appended postings but died before dl/
-    // stats — simulate by running the postings leg alone with its marker
+    // partial-commit crash: batch 1 dies in the extend's dl leg — postings
+    // land with their marker, dl and stats do not
+    CrashPoints.armAt("lex.extend.dl")
+    try intercept[CrashPoints.CrashInjected](
+      LexIndexStream.processBatch(spark, "spec_lex_str", c, 1L, work))
+    finally CrashPoints.disarm()
     val fs = new org.apache.hadoop.fs.Path(work)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    c.write.mode("overwrite").parquet(s"$work/stage/b=1")
-    LexIndex.appendPostings(spark.read.parquet(s"$work/stage/b=1"), "spec_lex_str")
-    fs.create(new org.apache.hadoop.fs.Path(s"$work/_committed/b=1.postings"), true).close()
+    def marked(m: String) = fs.exists(new org.apache.hadoop.fs.Path(s"$work/_committed/$m"))
+    assert(marked("b=1.postings") && !marked("b=1.dl") && !marked("b=1.stats"))
     // the replayed batch must finish dl+stats WITHOUT re-appending postings
     LexIndexStream.processBatch(spark, "spec_lex_str", c, 1L, work)
     LexIndex.build(all, "spec_lex_str_all", buckets = 4)
     assert(rows(LexIndex.bm25Against(spark, "spec_lex_str"))
       == rows(LexIndex.bm25Against(spark, "spec_lex_str_all")),
       "streamed index must equal a from-scratch build over all arrivals")
+    // a committed batch leaves no staging copy behind
+    val stage = new org.apache.hadoop.fs.Path(s"$work/stage")
+    assert(!fs.exists(stage) || fs.listStatus(stage).isEmpty,
+      s"stage directories left: ${fs.listStatus(stage).map(_.getPath.getName).mkString(",")}")
+  }
+
+  test("an empty stream batch commits and leaves the stats totals unchanged") {
+    import graft.streaming.LexIndexStream
+    val name = "spec_lex_empty"
+    LexIndex.build(docs.filter(col("cb") >= 50).select("doc_id", "text"), name)
+    def totals() = spark.table(s"${name}_stats")
+      .agg(sum(col("n_docs")), sum(col("sum_dl"))).collect()(0).toSeq
+    val before = totals()
+    val work = java.nio.file.Files.createTempDirectory("lex_empty").toString
+    LexIndexStream.processBatch(spark, name,
+      docs.select("doc_id", "text").limit(0), 0L, work, compactEvery = 1)
+    assert(totals() == before)
+    assert(new java.io.File(s"$work/_committed/b=0").exists, "the empty batch did not commit")
   }
 
   test("probe plan prunes postings buckets to the query terms") {
